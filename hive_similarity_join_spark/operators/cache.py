@@ -292,7 +292,13 @@ def release_session_pins() -> int:
 
 
 def pin(df: DataFrame, storage_level=None) -> DataFrame:
-    """Persist ``df`` and track it for release at the next builder entry."""
+    """Persist ``df`` and track it for release at the next builder entry.
+
+    The pinned stage is AQE-sized, like any other shuffle: its
+    partitions are coalesced by bytes and skewed ones split, so it holds
+    as many partitions as its data needs, not
+    ``spark.sql.shuffle.partitions`` (the decision and its reason are in
+    the ``session`` module docstring)."""
     df = df.persist(storage_level) if storage_level is not None else df.persist()
     _PINNED.append(df)
     return df

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.rank import ranked_by
 from hive_similarity_join_spark.operators.similarity import tokenize
-from hive_similarity_join_spark.operators.partitions import parallelism
+from hive_similarity_join_spark.operators.partitions import parallelism, spread
 
 P_MOD = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 NUM_PERM = 16
@@ -106,11 +106,7 @@ def _ranked_tokens(
     ranked_by — so the (token -> rank) mapping is IDENTICAL, and with it
     every permutation hash and signature downstream. Passing it skips
     the per-session frequency + two-pass rank rebuild."""
-    # Spread a few-partition input before the tokenize/explode map work
-    # (a small single-file scan would otherwise run it on 1-2 cores).
-    n_part = parallelism(df)
-    if df.rdd.getNumPartitions() < n_part:
-        df = df.repartition(n_part)
+    df = spread(df)  # before the tokenize/explode map work
     toks = F.col(tokens_col) if tokens_col else tokenize(text_col)
     tok = (
         df.select(F.col(id_col).alias("_id"), F.explode(toks).alias("_tok"))
@@ -496,9 +492,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     from 60 conditional-sum aggregates — wide but fully codegen'd,
     one shuffle on the doc id.
     """
-    n_part = parallelism(df)
-    if df.rdd.getNumPartitions() < n_part:
-        df = df.repartition(n_part)
+    df = spread(df)
     tok = (
         df.select(F.col(id_col).alias("_id"), F.explode(tokenize(text_col)).alias("_tok"))
         .distinct()

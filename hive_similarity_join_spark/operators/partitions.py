@@ -1,4 +1,5 @@
-"""Explicit repartition sizing for AQE-exempt candidate joins.
+"""Explicit partition sizing: AQE-exempt candidate joins and the one
+way operators spread a few-partition input (:func:`spread`).
 
 Several operators repartition explicitly because their joins have tiny
 INPUTS but quadratic candidate OUTPUTS — AQE sizes post-shuffle
@@ -22,6 +23,8 @@ verify fan-out) can scale the returned value explicitly.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -34,3 +37,36 @@ def parallelism(obj: DataFrame | SparkSession) -> int:
         # Sessions without a driver-side SparkContext (Connect-style):
         # fall back to the conf rather than guessing at hardware.
         return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+# Physical-plan nodes whose presence means reading the partition count
+# would execute part of the plan: under AQE ``df.rdd`` materializes every
+# query stage (shuffle and broadcast alike), and without AQE a broadcast
+# or range-partitioned exchange still runs its job while the RDD is built.
+_EAGER_NODE = re.compile(r"^[\s:+|-]*(AdaptiveSparkPlan|\w*Exchange|\w*Subquery)\b", re.M)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` spread over at least :func:`parallelism` partitions, decided
+    without launching a Spark job.
+
+    Every map stage downstream of a scan (tokenize, explode, prefix emit)
+    inherits the scan's partitioning, so a small single-file input would
+    run that work on one or two cores. A plan that is only scans and
+    narrow operators reports its partition count from the file splits at
+    no cost; it is spread only when that count is below
+    :func:`parallelism`, and at real scale (many files) this is a no-op.
+
+    A plan with an exchange is spread unconditionally. Its partition
+    count is decided by AQE at run time, and reading it first would run
+    the upstream shuffle as a job of its own that the real query then
+    runs again. An input small enough to need spreading is exactly the
+    one AQE coalesces below the core count, and a round-robin of an
+    already-shuffled relation costs one exchange of its rows, never a
+    second run of the plan that produced them.
+    """
+    n_part = parallelism(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if _EAGER_NODE.search(plan) or df.rdd.getNumPartitions() < n_part:
+        return df.repartition(n_part)
+    return df

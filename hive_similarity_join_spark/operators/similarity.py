@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.rank import ranked_by
 from hive_similarity_join_spark.operators.cache import pin
-from hive_similarity_join_spark.operators.partitions import parallelism
+from hive_similarity_join_spark.operators.partitions import parallelism, spread
 
 MEASURES = ("jaccard", "overlap", "dice", "cosine")
 
@@ -97,16 +97,10 @@ def _tokenized(df: DataFrame, id_col: str, text_col: str, tokens_col: str | None
     """(_id, _toks) with empty token sets dropped (degenerate for every
     measure and for prefix arithmetic; documented exclusion).
 
-    If the input arrives in fewer partitions than the session's shuffle
-    parallelism (typical for a small un-partitioned file), spread it
-    BEFORE tokenizing: every downstream map stage (tokenize, explode,
-    prefix emit) inherits the scan's partitioning, and 2 scan tasks
-    would serialize work meant for 32 cores. At real scale the input
-    already has >= shuffle-partition files and this is a no-op.
+    The input is spread BEFORE tokenizing (``partitions.spread``): every
+    downstream map stage inherits its partitioning.
     """
-    n_part = parallelism(df)
-    if df.rdd.getNumPartitions() < n_part:
-        df = df.repartition(n_part)
+    df = spread(df)
     toks = F.col(tokens_col) if tokens_col else tokenize(text_col)
     return (
         df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
@@ -192,6 +186,24 @@ def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFr
     )
 
 
+def _prepared_sides(
+    sorted_rel: DataFrame,
+    other: DataFrame | None,
+    other_sorted_rel: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(R, S) prepared relations for a call through the ``sorted_rel=``
+    seam. An R-S call (``other`` given) must pass both sides: falling
+    back to ``sorted_rel`` for S would silently self-join R."""
+    if other is not None and other_sorted_rel is None:
+        raise ValueError(
+            "other= with sorted_rel= needs other_sorted_rel= as well "
+            "(the prepared S side); without it the call would self-join R"
+        )
+    return sorted_rel, (
+        other_sorted_rel if other_sorted_rel is not None else sorted_rel
+    )
+
+
 def similarity_join(
     df: DataFrame,
     id_col: str,
@@ -217,7 +229,9 @@ def similarity_join(
     measure, so every same-corpus kernel run shares it; per-doc rows
     are side-independent, so a corpus-wide relation restricted to each
     side's ids is exactly what the inline build produces. When given,
-    the tokenize/dictionary/sort stages are skipped entirely.
+    the tokenize/dictionary/sort stages are skipped entirely. An R-S
+    call must pass both: ``other`` with ``sorted_rel`` but without
+    ``other_sorted_rel`` raises ``ValueError``.
 
     Self-join (``other is None``): all pairs with id1 < id2 (canonical
     orientation, SURVEY §7) and measure >= threshold.
@@ -232,12 +246,16 @@ def similarity_join(
     exactly these stage boundaries to HDFS between its MR jobs; we keep
     them in executor storage (MEMORY_AND_DISK — spills, never OOMs,
     sized O(corpus tokens) which at 100 TB is the same scratch the MR
-    jobs would write to disk anyway). Pass ``persist=False`` for a
-    fully lazy plan (composition into larger DAGs, single-consumer
-    callers).
+    jobs would write to disk anyway). The pinned stages are AQE-sized
+    (coalesced by bytes and skew-split, see the ``session`` module
+    docstring), so a consumer schedules one task per useful partition
+    rather than one per ``spark.sql.shuffle.partitions``. Pass
+    ``persist=False`` for a fully lazy plan (composition into larger
+    DAGs, single-consumer callers).
 
-    Partitioning (the load-bearing scale decision): the candidate join's
-    INPUT is small (one row per prefix token) but its OUTPUT is the
+    Partitioning (the load-bearing scale decision): a few-partition
+    input is spread to one task per core before tokenizing
+    (``partitions.spread``). The candidate join's INPUT is small (one row per prefix token) but its OUTPUT is the
     candidate-pair blowup — AQE sizes post-shuffle partitions by map
     output and would coalesce this join to ~1 task, serializing the
     entire verify. Both sides are therefore repartitioned with an
@@ -264,10 +282,7 @@ def similarity_join(
     from pyspark import StorageLevel
 
     if sorted_rel is not None:
-        r_sorted = sorted_rel
-        s_sorted = (
-            other_sorted_rel if other_sorted_rel is not None else sorted_rel
-        )
+        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
     else:
         r = _tokenized(df, id_col, text_col, tokens_col)
         if persist:
@@ -588,10 +603,7 @@ def containment_join(
     # relations — same seam and proof as similarity_join's (the
     # relation depends only on (corpus, dictionary)).
     if sorted_rel is not None:
-        r_sorted = sorted_rel
-        s_sorted = (
-            other_sorted_rel if other_sorted_rel is not None else sorted_rel
-        )
+        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
     else:
         r = _tokenized(df, id_col, text_col, tokens_col)
         if persist:
@@ -823,10 +835,7 @@ def weighted_containment_join(
     # contract as rarity_dict). When given, the tokenize/dict/sort
     # stages are skipped entirely.
     if sorted_rel is not None:
-        r_sorted = sorted_rel
-        s_sorted = (
-            other_sorted_rel if other_sorted_rel is not None else sorted_rel
-        )
+        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
         return _weighted_containment_core(
             df, r_sorted, s_sorted, threshold, n_salts,
             rs=other is not None or other_sorted_rel is not None,

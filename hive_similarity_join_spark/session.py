@@ -6,6 +6,27 @@ Design notes (100 TB posture):
   (the Hive reference family tunes ``mapred.reduce.tasks`` by hand).
 - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
   real cluster set it to ~2-3x total cores and let AQE coalesce.
+- Pinned relations are AQE-sized too
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``).
+  The VCL pipeline writes its stage boundaries to HDFS between MR jobs;
+  the kernel keeps the same boundaries as ``cache.pin``-ed relations
+  (the tokenized corpus, the rank-sorted ``(_id, _rks, _n)`` relation).
+  Spark's default (``false``) builds every cached plan with final-stage
+  coalescing and skew splitting OFF, so a pinned stage keeps all
+  ``spark.sql.shuffle.partitions`` partitions — 32 in our sessions, 200
+  in a plain one — and every consumer schedules a task per partition,
+  almost all of them near-empty on a corpus-bounded relation. With the
+  flag on, a pinned plan is coalesced by bytes and its skewed partitions
+  are split, exactly like every other shuffle. The price Spark documents
+  is that a consumer may need an extra shuffle, because the cached
+  output no longer promises the partitioning of its last exchange. No
+  registered query pays it: the explained plans of all keys carry the
+  same number of shuffles either way (the kernel's consumers re-key the
+  pinned relations anyway: prefix explode, salt repartition, verify
+  joins on candidate pairs). Measured on 1,000 Zipf documents, three
+  kernel joins per pass on local[4]: 877 -> 164 stage tasks per pass
+  with identical stage row counts, and executor CPU time down ~29%.
+  A fixed default, like ``skewJoin.enabled``; not a parameter.
 - Session timezone pinned to UTC so timestamp semantics are independent of
   the host (and match the DuckDB oracle, which sees naive parquet values).
 """
@@ -28,6 +49,7 @@ def tune(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
     }
     for k, v in conf.items():

@@ -73,3 +73,20 @@ def test_release_pins_resets_tracking(spark):
     assert cache.pinned_count() == 1
     assert cache.release_pins() == 1
     assert cache.pinned_count() == 0
+
+
+def test_pinned_relation_is_aqe_sized(spark):
+    """A pinned stage is sized by AQE like any other shuffle: a small
+    groupBy result keeps a few partitions, not all
+    ``spark.sql.shuffle.partitions`` of them (each one a task for every
+    consumer)."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count()
+    pinned = cache.pin(df)
+    try:
+        assert pinned.count() == 10
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert pinned.rdd.getNumPartitions() < n_shuffle
+    finally:
+        cache.release_pins()

@@ -12,9 +12,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.similarity import (
+    containment_join,
     naive_similarity_join,
     similarity_join,
     tokenize,
+    weighted_containment_join,
 )
 from hive_similarity_join_spark.sources.loader import load_table
 from tests.conftest import SF_SMOKE
@@ -476,3 +478,17 @@ def test_weighted_jaccard_reduces_to_unweighted_on_uniform_weights(spark):
     uq = {(frozenset((r.id1, r.id2)), round(r.sim, 12))
           for r in similarity_join(df, "id", "text", threshold=0.4).collect()}
     assert wq == uq
+
+
+@pytest.mark.parametrize(
+    "join", [similarity_join, containment_join, weighted_containment_join]
+)
+def test_rs_call_without_other_sorted_rel_raises(spark, join):
+    """An R-S call through the prepared-relation seam must pass both
+    sides; with only ``sorted_rel`` it would silently self-join R."""
+    docs = spark.createDataFrame(_random_docs(61, n=10))
+    prepared = spark.createDataFrame(
+        [(0, [1, 2], 2)], "_id long, _rks array<int>, _n int"
+    )
+    with pytest.raises(ValueError, match="other_sorted_rel"):
+        join(docs, "id", "text", other=docs, sorted_rel=prepared)
