@@ -25,7 +25,9 @@ concurrent builds use DISTINCT names (no build ever races itself),
 dict get/set are GIL-atomic, and a lost race would only rebuild a
 deterministic relation — degrade is duplicate work, never a wrong
 answer. ``release_pins`` / the pin list remain single-consumer: no
-concurrent code path releases pins.
+concurrent code path releases pins. Nested builds must form an acyclic
+dependency graph; a cycle raises ``ValueError`` naming it (see
+``_BuildLock``) rather than hanging on the per-name build locks.
 """
 
 from __future__ import annotations
@@ -124,24 +126,116 @@ def session_pin(name: str, scope: str, build) -> DataFrame:
 
 _SESSION_STATE: dict[str, tuple[str, object]] = {}
 
-_STATE_LOCKS: dict[str, threading.Lock] = {}
+_STATE_LOCKS: dict[str, "_BuildLock"] = {}
 _STATE_LOCKS_GUARD = threading.Lock()
+#: thread ident -> the build lock that thread is blocked on
+_WAITING: dict[int, "_BuildLock"] = {}
+_HELD = threading.local()  # .names: this thread's open builds, outermost first
 
 
-def _name_lock(name: str) -> threading.Lock:
+class _BuildLock:
+    """Per-name build lock for the session tiers that raises
+    ``ValueError`` instead of deadlocking on a generator-dependency
+    cycle. Builds nest (a generator's ``build()`` reads other shared
+    relations), so the dependency graph must stay acyclic: a thread that
+    asks for a name it is already building, or whose wait would close a
+    ring of threads each waiting on the next one's build, gets the cycle
+    named in the error instead of hanging its prefetch pool."""
+
+    def __init__(self, name: str):
+        self.name = name
+        self.owner: int | None = None
+        self._lock = threading.Lock()
+
+    def _cycle(self, me: int) -> list[str] | None:
+        """Names along the wait chain from this lock back to one ``me``
+        holds, or None. Called under ``_STATE_LOCKS_GUARD``."""
+        chain, seen = [self], set()
+        while chain[-1].owner is not None and chain[-1].owner not in seen:
+            if chain[-1].owner == me:
+                return [lk.name for lk in chain]
+            seen.add(chain[-1].owner)
+            nxt = _WAITING.get(chain[-1].owner)
+            if nxt is None:
+                return None
+            chain.append(nxt)
+        return None
+
+    def _take(self, me: int) -> None:
+        self.owner = me
+        if not hasattr(_HELD, "names"):
+            _HELD.names = []
+        _HELD.names.append(self.name)
+
+    def acquire(self, blocking: bool = True) -> bool:
+        me = threading.get_ident()
+        with _STATE_LOCKS_GUARD:
+            if self._lock.acquire(blocking=False):
+                self._take(me)
+                return True
+            if not blocking:
+                return False
+            cycle = self._cycle(me)
+            if cycle is not None:
+                held = _HELD.names
+                ring = held[held.index(cycle[-1]):] + cycle
+                raise ValueError(
+                    "shared generator dependency cycle: " + " -> ".join(ring)
+                )
+            _WAITING[me] = self
+        self._lock.acquire()
+        with _STATE_LOCKS_GUARD:
+            del _WAITING[me]
+            self._take(me)
+        return True
+
+    def release(self) -> None:
+        with _STATE_LOCKS_GUARD:
+            self.owner = None
+            _HELD.names.pop()
+        self._lock.release()
+
+    def __enter__(self) -> "_BuildLock":
+        self.acquire()
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        self.release()
+        return False
+
+
+def _name_lock(name: str) -> _BuildLock:
     """Per-name build lock for the session tiers (r17): concurrent
     builders of DISTINCT names overlap freely (the §2.6 prefetch
-    pattern), but two prefetched generators may now share a NESTED
+    pattern), but two prefetched generators may share a NESTED
     dependency (the ensemble's exact and SNM builds both reach
     docs_rank_arrays) — without this, both threads would miss and
     eagerly materialize the same relation twice (safe — deterministic,
     last write wins — but it wastes a full build inside the absorber).
-    Double-checked under the lock in the callers."""
+    Double-checked under the lock in :func:`_memo`."""
     with _STATE_LOCKS_GUARD:
         lock = _STATE_LOCKS.get(name)
         if lock is None:
-            lock = _STATE_LOCKS[name] = threading.Lock()
+            lock = _STATE_LOCKS[name] = _BuildLock(name)
         return lock
+
+
+def _memo(name: str, scope: str, make):
+    """The ONE session-tier memo body: the value stored under ``name``
+    for ``scope``, or ``make()``'s, built at most once per (name,
+    scope) however many threads ask (double-checked under the name's
+    build lock)."""
+    cur = _SESSION_STATE.get(name)
+    if cur is not None and cur[0] == scope:
+        return cur[1]
+    with _name_lock(name):
+        cur = _SESSION_STATE.get(name)  # double-check under the lock
+        if cur is not None and cur[0] == scope:
+            return cur[1]
+        _SESSION_STATE.pop(name, None)
+        val = make()
+        _SESSION_STATE[name] = (scope, val)
+        return val
 
 
 #: Python-evaluation node names no shared generator may plan — same
@@ -219,19 +313,13 @@ def session_state(name: str, scope: str, build):
     contract), so losing the session just means the next one recomputes
     from the parquet inputs — nothing persists across processes.
     """
-    cur = _SESSION_STATE.get(name)
-    if cur is not None and cur[0] == scope:
-        return cur[1]
-    with _name_lock(name):
-        cur = _SESSION_STATE.get(name)  # double-check under the lock
-        if cur is not None and cur[0] == scope:
-            return cur[1]
-        if cur is not None:
-            del _SESSION_STATE[name]
+
+    def make():
         val = build()
         _gate_state_value(name, val)
-        _SESSION_STATE[name] = (scope, val)
         return val
+
+    return _memo(name, scope, make)
 
 
 def session_ckpt(name: str, scope: str, build) -> DataFrame:
@@ -253,18 +341,10 @@ def session_ckpt(name: str, scope: str, build) -> DataFrame:
     from the parquet inputs (nothing persists across processes, same
     contract as every pin tier). Only id-pair-sized / vocab-sized
     relations belong here."""
-    cur = _SESSION_STATE.get(name)
-    if cur is not None and cur[0] == scope:
-        return cur[1]
-    with _name_lock(name):
-        cur = _SESSION_STATE.get(name)  # double-check under the lock
-        if cur is not None and cur[0] == scope:
-            return cur[1]
-        if cur is not None:
-            del _SESSION_STATE[name]
-        df = _gate_generator_plan(name, build()).localCheckpoint(eager=True)
-        _SESSION_STATE[name] = (scope, df)
-        return df
+    return _memo(
+        name, scope,
+        lambda: _gate_generator_plan(name, build()).localCheckpoint(eager=True),
+    )
 
 
 def release_session_state() -> int:

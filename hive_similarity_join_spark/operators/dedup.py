@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.rank import ranked_by
 from hive_similarity_join_spark.operators.similarity import tokenize
-from hive_similarity_join_spark.operators.partitions import parallelism, spread
+from hive_similarity_join_spark.operators.partitions import hash_placed, parallelism, spread
 
 P_MOD = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 NUM_PERM = 16
@@ -214,22 +214,20 @@ def minhash_lsh_pairs(
             df, id_col, text_col, with_rank_arrays=True, tokens_col=tokens_col
         )
     bands = band_signatures(sigs)
-    # The band join's INPUT is tiny (docs x bands rows) while its OUTPUT
-    # is the candidate-pair blowup — AQE sizes post-shuffle partitions by
-    # map output and would coalesce the join (and the verify behind it)
-    # to ~1 task. Explicit repartition counts opt these shuffles out of
-    # coalescing, same as the similarity kernel's candidate join.
+    # The band join has a tiny input and a candidate-pair output, so its
+    # sides are placed with an explicit count like the similarity
+    # kernel's candidate join (partitions module docstring).
     # (Salting the signature key like the kernel does was measured a
     # wash here at sf0.1 — this corpus's band buckets aren't hot enough
     # to serialize; adopt the kernel's salt pattern if a corpus with
     # larger duplicate clusters makes one bucket dominate.)
     n_part = parallelism(df)
-    a = bands.select(
-        F.col("_id").alias("id1"), F.col("_band").alias("_band1"), F.col("_bsig").alias("_bsig1")
-    ).repartition(n_part, "_band1", "_bsig1")
-    b = bands.select(
-        F.col("_id").alias("id2"), F.col("_band").alias("_band2"), F.col("_bsig").alias("_bsig2")
-    ).repartition(n_part, "_band2", "_bsig2")
+    a = hash_placed(
+        bands, ["_band", "_bsig"], {"_id": "id1", "_band": "_band1", "_bsig": "_bsig1"}
+    )
+    b = hash_placed(
+        bands, ["_band", "_bsig"], {"_id": "id2", "_band": "_band2", "_bsig": "_bsig2"}
+    )
     cand = (
         a.join(
             b,
@@ -297,21 +295,16 @@ def incremental_minhash_screen(
     bands = band_signatures(sigs.select("_id", *[f"_h{i+1}" for i in range(NUM_PERM)]))
     bands = bands.join(flags, "_id")
     n_part = parallelism(df)
-    a = (
-        bands.filter("_new")
-        .select(
-            F.col("_id").alias("id1"),
-            F.col("_band").alias("_band1"),
-            F.col("_bsig").alias("_bsig1"),
-        )
-        .repartition(n_part, "_band1", "_bsig1")
+    a = hash_placed(
+        bands.filter("_new"),
+        ["_band", "_bsig"],
+        {"_id": "id1", "_band": "_band1", "_bsig": "_bsig1"},
     )
-    b = bands.select(
-        F.col("_id").alias("id2"),
-        F.col("_new").alias("_new2"),
-        F.col("_band").alias("_band2"),
-        F.col("_bsig").alias("_bsig2"),
-    ).repartition(n_part, "_band2", "_bsig2")
+    b = hash_placed(
+        bands,
+        ["_band", "_bsig"],
+        {"_id": "id2", "_new": "_new2", "_band": "_band2", "_bsig": "_bsig2"},
+    )
     cand = (
         a.join(
             b,

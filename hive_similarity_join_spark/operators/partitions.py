@@ -1,10 +1,12 @@
-"""Explicit partition sizing: AQE-exempt candidate joins and the one
-way operators spread a few-partition input (:func:`spread`).
+"""Explicit partition sizing: explicit-count join sides
+(:func:`hash_placed`) and the one way operators spread a few-partition
+input (:func:`spread`).
 
 Several operators repartition explicitly because their joins have tiny
 INPUTS but quadratic candidate OUTPUTS — AQE sizes post-shuffle
 partitions by map-output bytes and would coalesce the join (and the
-verify behind it) to ~1 task. Those explicit counts must NOT inherit
+verify behind it) to ~1 task. A user-specified partition count is
+exempt from that coalescing. Those explicit counts must NOT inherit
 ``spark.sql.shuffle.partitions`` verbatim: the session conf is sized
 for generic large shuffles (the external driver's plain session runs
 Spark's default 200), while these relations are corpus-bounded — a
@@ -19,6 +21,23 @@ a 1000-executor x 4-core cluster -> 4000), i.e. one wave of tasks over
 whatever hardware actually exists, independent of the generic shuffle
 sizing knob. Callers that need MORE than one wave (e.g. memory-bound
 verify fan-out) can scale the returned value explicitly.
+
+The rule for a shuffled join's inputs: an explicit count holds only
+when the join's child is NOT a bare exchange. When every child of a
+shuffled join is a ``ShuffleExchange``, ``EnsureRequirements`` treats
+them all as re-shuffles and widens them to at least
+``spark.sql.shuffle.partitions``. If the leaves carry no statistics (a
+``localCheckpoint``-ed shared relation), those widened stages run
+first; AQE may then switch the join to broadcast and re-insert the
+requested count as a second exchange on top, so every row is shuffled
+twice. :func:`hash_placed` therefore hash-partitions on the RAW key
+columns and renames afterwards: the child is a ``Project`` whose output
+partitioning is ``HashPartitioning(keys, n)``, two such sides are
+already co-partitioned, and ``EnsureRequirements`` leaves them alone.
+Every explicit-count input of a shuffled join goes through it, except
+``q_dedup_lsh_band_sweep``'s skewed band join, which measurably needs
+the widened count (its docstring has the numbers). Broadcast-hinted sides and single-input ``repartition -> distinct``
+steps need no helper.
 """
 
 from __future__ import annotations
@@ -26,6 +45,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def parallelism(obj: DataFrame | SparkSession) -> int:
@@ -37,6 +57,16 @@ def parallelism(obj: DataFrame | SparkSession) -> int:
         # Sessions without a driver-side SparkContext (Connect-style):
         # fall back to the conf rather than guessing at hardware.
         return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def hash_placed(df: DataFrame, keys: list[str], names: dict[str, str]) -> DataFrame:
+    """One input of a shuffled join: ``df`` hash-partitioned on its raw
+    ``keys`` into :func:`parallelism` partitions, THEN projected to
+    ``names`` (raw column -> join-side name; unlisted columns are
+    dropped). The rename sits above the exchange so the join sees a
+    partitioned ``Project``, not a bare exchange (see module doc)."""
+    placed = df.select(*names).repartition(parallelism(df), *keys)
+    return placed.select(*[F.col(src).alias(dst) for src, dst in names.items()])
 
 
 # Physical-plan nodes whose presence means reading the partition count

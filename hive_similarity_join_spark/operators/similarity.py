@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.rank import ranked_by
 from hive_similarity_join_spark.operators.cache import pin
-from hive_similarity_join_spark.operators.partitions import parallelism, spread
+from hive_similarity_join_spark.operators.partitions import hash_placed, spread
 
 MEASURES = ("jaccard", "overlap", "dice", "cosine")
 
@@ -182,7 +182,31 @@ def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFr
         "_id",
         "_rks",
         "_n",
-        F.posexplode(F.slice("_rks", 1, p)).alias("_ppos", "_ptok"),
+        F.posexplode(F.slice("_rks", 1, p)).alias("_pp", "_ptok"),
+    )
+
+
+def _all_salts(n_salts: int) -> Column:
+    """Probe-side salt: every prefix row is replicated across all salts."""
+    return F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+
+
+def _one_salt(n_salts: int) -> Column:
+    """Index-side salt: each row lands on exactly one salt, by its id."""
+    return F.pmod(F.hash(F.col("_id")), F.lit(n_salts))
+
+
+def _placed_side(
+    rows: DataFrame, salt: Column, side: int,
+    cols: tuple[str, ...] = ("_id", "_n", "_pp", "_ptok"),
+) -> DataFrame:
+    """One input of a salted candidate join: ``rows``' ``cols`` plus
+    ``_salt``, hash-placed on (``_ptok``, ``_salt``) and renamed for
+    join side ``side`` (``_id`` -> ``id1``, ``_x`` -> ``_x1``)."""
+    return hash_placed(
+        rows.withColumn("_salt", salt),
+        ["_ptok", "_salt"],
+        {c: f"id{side}" if c == "_id" else f"{c}{side}" for c in (*cols, "_salt")},
     )
 
 
@@ -255,12 +279,11 @@ def similarity_join(
 
     Partitioning (the load-bearing scale decision): a few-partition
     input is spread to one task per core before tokenizing
-    (``partitions.spread``). The candidate join's INPUT is small (one row per prefix token) but its OUTPUT is the
-    candidate-pair blowup — AQE sizes post-shuffle partitions by map
-    output and would coalesce this join to ~1 task, serializing the
-    entire verify. Both sides are therefore repartitioned with an
-    EXPLICIT partition count (user-specified numPartitions is exempt
-    from AQE coalescing) on (prefix token, salt): the b-side picks
+    (``partitions.spread``). The candidate join's INPUT is small (one
+    row per prefix token) but its OUTPUT is the candidate-pair blowup,
+    so both sides are placed with an EXPLICIT partition count
+    (``partitions.hash_placed``; its module docstring says why, and
+    when such a count holds) on (prefix token, salt): the b-side picks
     ``salt = hash(id) % n_salts`` and the a-side replicates each prefix
     row across all salts, splitting every hot token's candidate block
     across n_salts partitions — frequent-token skew (the Hive
@@ -322,13 +345,13 @@ def similarity_join(
             "_id",
             "_rks",
             "_n",
-            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_ppos", "_ptok"),
+            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_pp", "_ptok"),
         )
         b = s_sorted.select(
             "_id",
             "_rks",
             "_n",
-            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_ppos", "_ptok"),
+            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_pp", "_ptok"),
         )
     else:
         # Self-join: orient each pair by (size, id) so the a-side is the
@@ -340,21 +363,8 @@ def similarity_join(
         a = _prefix_exploded(r_sorted, t_eq, short=(other is None))
         b = _prefix_exploded(s_sorted, t_eq)
 
-    n_part = parallelism(df)
-    a = a.select(
-        F.col("_id").alias("id1"),
-        F.col("_n").alias("_n1"),
-        F.col("_ppos").alias("_pp1"),
-        F.col("_ptok").alias("_ptok1"),
-    ).withColumn("_salt1", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    b = b.select(
-        F.col("_id").alias("id2"),
-        F.col("_n").alias("_n2"),
-        F.col("_ppos").alias("_pp2"),
-        F.col("_ptok").alias("_ptok2"),
-    ).withColumn("_salt2", F.pmod(F.hash(F.col("id2")), F.lit(n_salts)))
-    a = a.repartition(n_part, "_ptok1", "_salt1")
-    b = b.repartition(n_part, "_ptok2", "_salt2")
+    a = _placed_side(a, _all_salts(n_salts), 1)
+    b = _placed_side(b, _one_salt(n_salts), 2)
 
     cond = [
         F.col("_ptok1") == F.col("_ptok2"),
@@ -584,7 +594,8 @@ def containment_join(
     in corpus tokens, the same relation the dictionary pass already
     shuffles — and the probe side is prefix rows only (~(1-t) of corpus
     tokens), salted x``n_salts`` against hot tokens exactly like
-    ``similarity_join`` (same explicit repartition, AQE-exempt). The
+    ``similarity_join`` (same explicit placement,
+    ``partitions.hash_placed``). The
     candidate blowup is bounded by sum over probe-prefix tokens of that
     token's document frequency — rarest-first ranks make prefix tokens
     the rare ones, which is what keeps this sub-quadratic at 100 TB.
@@ -634,25 +645,12 @@ def containment_join(
         if persist and other is not None:
             s_sorted = pin(s_sorted, StorageLevel.MEMORY_AND_DISK)
 
-    probe = _prefix_exploded(r_sorted, threshold).select(
-        F.col("_id").alias("id1"),
-        F.col("_n").alias("_n1"),
-        F.col("_ppos").alias("_pp1"),
-        F.col("_ptok").alias("_ptok1"),
+    probe = _placed_side(_prefix_exploded(r_sorted, threshold), _all_salts(n_salts), 1)
+    index = _placed_side(
+        s_sorted.select("_id", "_n", F.posexplode("_rks").alias("_pp", "_ptok")),
+        _one_salt(n_salts),
+        2,
     )
-    index = s_sorted.select(
-        F.col("_id").alias("id2"),
-        F.col("_n").alias("_n2"),
-        F.posexplode("_rks").alias("_pp2", "_ptok2"),
-    )
-
-    n_part = parallelism(df)
-    probe = probe.withColumn(
-        "_salt1", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    ).repartition(n_part, "_ptok1", "_salt1")
-    index = index.withColumn(
-        "_salt2", F.pmod(F.hash(F.col("id2")), F.lit(n_salts))
-    ).repartition(n_part, "_ptok2", "_salt2")
 
     alpha = F.ceil(F.col("_n1").cast("double") * threshold - 1e-9)
     ubound = 1 + F.least(
@@ -818,7 +816,7 @@ def weighted_containment_join(
     Scale shape: identical to containment_join — the dictionary (now
     carrying df-derived weights, built with a 1-row broadcast of the
     corpus doc count, never a collect) broadcasts; probe prefixes are
-    salted x``n_salts`` with explicit AQE-exempt partition counts; the
+    salted x``n_salts`` and placed by ``partitions.hash_placed``; the
     index side is the linear inverted index. Rarity weighting makes
     prefixes concentrate on rare tokens — the same frequency skew
     defense as the unweighted rarest-first order, but now the filter
@@ -837,7 +835,7 @@ def weighted_containment_join(
     if sorted_rel is not None:
         r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
         return _weighted_containment_core(
-            df, r_sorted, s_sorted, threshold, n_salts,
+            r_sorted, s_sorted, threshold, n_salts,
             rs=other is not None or other_sorted_rel is not None,
             min_weight_ratio=min_weight_ratio,
         )
@@ -881,13 +879,45 @@ def weighted_containment_join(
     if persist and s is not None:
         s_sorted = pin(s_sorted, StorageLevel.MEMORY_AND_DISK)
     return _weighted_containment_core(
-        df, r_sorted, s_sorted, threshold, n_salts,
+        r_sorted, s_sorted, threshold, n_salts,
         rs=other is not None, min_weight_ratio=min_weight_ratio,
     )
 
 
+def _weighted_sides(
+    r_sorted: DataFrame, s_sorted: DataFrame, rate: float, n_salts: int
+) -> tuple[DataFrame, DataFrame]:
+    """Placed (probe, index) inputs of the weighted candidate joins.
+
+    Probe rows: ``r_sorted``'s tokens whose suffix weight still reaches
+    ``rate * _tw1`` (the weighted prefix), salted x``n_salts``, as
+    (id1, _tw1, _ptok1, _wtok1, _nxt1, _salt1). Index rows: every token
+    of ``s_sorted`` as (id2, _tw2, _ptok2, _nxt2, _salt2). ``_nxt`` is
+    the weight after the token (its suffix weight minus its own)."""
+
+    def tokens(rel: DataFrame) -> DataFrame:
+        return rel.select(
+            "_id", "_tw",
+            F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
+        ).select(
+            "_id", "_tw", "_z",
+            F.col("_z._rks").alias("_ptok"),
+            F.col("_z._ws").alias("_wtok"),
+            (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt"),
+        )
+
+    alpha = F.col("_tw").cast("double") * rate - 1e-9
+    probe = _placed_side(
+        tokens(r_sorted).filter(F.col("_z._sfx").cast("double") >= alpha),
+        _all_salts(n_salts), 1, ("_id", "_tw", "_ptok", "_wtok", "_nxt"),
+    )
+    index = _placed_side(
+        tokens(s_sorted), _one_salt(n_salts), 2, ("_id", "_tw", "_ptok", "_nxt")
+    )
+    return probe, index
+
+
 def _weighted_containment_core(
-    df: DataFrame,
     r_sorted: DataFrame,
     s_sorted: DataFrame,
     threshold: float,
@@ -896,42 +926,8 @@ def _weighted_containment_core(
     min_weight_ratio: float | None,
 ) -> DataFrame:
     """Candidate generation + verify of ``weighted_containment_join``
-    over prebuilt weighted-sorted relations (``df`` only sizes the
-    explicit candidate-join partitioning)."""
-    alpha1 = F.col("_tw1").cast("double") * threshold - 1e-9
-    probe = (
-        r_sorted.select(
-            F.col("_id").alias("id1"),
-            F.col("_tw").alias("_tw1"),
-            F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
-        )
-        .filter(F.col("_z._sfx").cast("double") >= alpha1)
-        .select(
-            "id1",
-            "_tw1",
-            F.col("_z._rks").alias("_ptok1"),
-            F.col("_z._ws").alias("_wtok1"),
-            (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt1"),
-        )
-    )
-    index = s_sorted.select(
-        F.col("_id").alias("id2"),
-        F.col("_tw").alias("_tw2"),
-        F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
-    ).select(
-        "id2",
-        "_tw2",
-        F.col("_z._rks").alias("_ptok2"),
-        (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt2"),
-    )
-
-    n_part = parallelism(df)
-    probe = probe.withColumn(
-        "_salt1", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    ).repartition(n_part, "_ptok1", "_salt1")
-    index = index.withColumn(
-        "_salt2", F.pmod(F.hash(F.col("id2")), F.lit(n_salts))
-    ).repartition(n_part, "_ptok2", "_salt2")
+    over prebuilt weighted-sorted relations."""
+    probe, index = _weighted_sides(r_sorted, s_sorted, threshold, n_salts)
 
     alpha = F.col("_tw1").cast("double") * threshold - 1e-9
     pos_bound = (
@@ -1043,8 +1039,8 @@ def weighted_jaccard_join(
         engines compute the identical ratio of exact integers).
 
     The index side (the heavier doc) emits ALL tokens with suffix
-    weights — same probe-prefix x full-index shape, salting, explicit
-    AQE-exempt partitioning and broadcast dictionary as
+    weights — same probe-prefix x full-index shape, salting,
+    ``partitions.hash_placed`` placement and broadcast dictionary as
     ``weighted_containment_join``; rarest-first ranks keep probe
     prefixes on rare tokens, which is what bounds the candidate space
     at 100 TB.
@@ -1063,40 +1059,7 @@ def weighted_jaccard_join(
             r_sorted = pin(r_sorted, StorageLevel.MEMORY_AND_DISK)
 
     tt = threshold / (1.0 + threshold)
-    alpha_min = F.col("_tw1").cast("double") * (2.0 * tt) - 1e-9
-    probe = (
-        r_sorted.select(
-            F.col("_id").alias("id1"),
-            F.col("_tw").alias("_tw1"),
-            F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
-        )
-        .filter(F.col("_z._sfx").cast("double") >= alpha_min)
-        .select(
-            "id1",
-            "_tw1",
-            F.col("_z._rks").alias("_ptok1"),
-            F.col("_z._ws").alias("_wtok1"),
-            (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt1"),
-        )
-    )
-    index = r_sorted.select(
-        F.col("_id").alias("id2"),
-        F.col("_tw").alias("_tw2"),
-        F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
-    ).select(
-        "id2",
-        "_tw2",
-        F.col("_z._rks").alias("_ptok2"),
-        (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt2"),
-    )
-
-    n_part = parallelism(df)
-    probe = probe.withColumn(
-        "_salt1", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    ).repartition(n_part, "_ptok1", "_salt1")
-    index = index.withColumn(
-        "_salt2", F.pmod(F.hash(F.col("id2")), F.lit(n_salts))
-    ).repartition(n_part, "_ptok2", "_salt2")
+    probe, index = _weighted_sides(r_sorted, r_sorted, 2.0 * tt, n_salts)
 
     alpha = (
         (F.col("_tw1") + F.col("_tw2")).cast("double") * F.lit(tt) - 1e-9

@@ -32,7 +32,7 @@ from hive_similarity_join_spark.operators.similarity import similarity_join
 from hive_similarity_join_spark.queries.vectors_q import N_PROBES, topk_ckpt
 from hive_similarity_join_spark.registry import query
 from hive_similarity_join_spark.sources.loader import load_table
-from hive_similarity_join_spark.operators.partitions import parallelism
+from hive_similarity_join_spark.operators.partitions import hash_placed, parallelism
 
 MINHASH_T = 0.8
 CC_T = 0.9
@@ -785,14 +785,8 @@ def elsh_pair_graph(spark, sf_dir):
         v = e.select(
             F.col("vec_id").alias("_id"), V.as_double("embedding").alias("_v")
         ).withColumn("_bkt", bucket_expr(F.col("_v"), planes))
-        n_part = parallelism(spark)
-        a = v.select(
-            F.col("_id").alias("id1"), F.col("_v").alias("_v1"), "_bkt"
-        ).repartition(n_part, "_bkt")
-        b = v.select(
-            F.col("_id").alias("id2"), F.col("_v").alias("_v2"),
-            F.col("_bkt").alias("_bkt2"),
-        )
+        a = hash_placed(v, ["_bkt"], {"_id": "id1", "_v": "_v1", "_bkt": "_bkt"})
+        b = hash_placed(v, ["_bkt"], {"_id": "id2", "_v": "_v2", "_bkt": "_bkt2"})
         sim = V.cosine(F.col("_v1"), F.col("_v2"))
         return (
             a.join(
@@ -1125,13 +1119,11 @@ def q_minhash_estimate(spark, sf_dir):
         "_id", F.col("_bs._band").alias("_band"), F.col("_bs._bsig").alias("_bsig")
     )
     n_part = parallelism(spark)
-    a = bands.select(
-        F.col("_id").alias("id1"), "_band", "_bsig"
-    ).repartition(n_part, "_band", "_bsig")
-    b = bands.select(
-        F.col("_id").alias("id2"),
-        F.col("_band").alias("_band2"),
-        F.col("_bsig").alias("_bsig2"),
+    a = hash_placed(
+        bands, ["_band", "_bsig"], {"_id": "id1", "_band": "_band", "_bsig": "_bsig"}
+    )
+    b = hash_placed(
+        bands, ["_band", "_bsig"], {"_id": "id2", "_band": "_band2", "_bsig": "_bsig2"}
     )
     cand = (
         a.join(
@@ -3469,11 +3461,12 @@ def q_dedup_lsh_band_sweep(spark, sf_dir):
     One signature relation feeds all three layouts: the band structs
     of every layout explode together (14 rows/doc) and ONE self-join
     keyed on (layout, band, bsig) produces all candidates — no
-    per-layout passes, same join shape as minhash_lsh_pairs
-    (explicit repartition, AQE-coalesce exempt). The truth side is
-    the already-hash-verified exact key composed verbatim."""
-    from hive_similarity_join_spark.operators.partitions import parallelism
-
+    per-layout passes. Unlike minhash_lsh_pairs, its sides stay bare
+    exchanges, which Spark widens to ``spark.sql.shuffle.partitions``
+    (``partitions`` module docstring): this join's buckets are skewed,
+    and at sf0.1 on 4 cores it ran 19-20 s at ``parallelism()``
+    partitions against 12-14 s widened. The truth side is the
+    already-hash-verified exact key composed verbatim."""
     docs = load_table(spark, sf_dir, "documents")
     # r17: the shared corpus signature relation (the unused _rks column
     # is projected away; the band structs read only _h1.._h16).
@@ -3837,7 +3830,12 @@ def snm_scored_pairs_from(arrs, w_max: int, token_dict=None,
 
     ``rank_arrays``: a prebuilt (_id, _rks, _n) rank-sorted relation for
     the SAME corpus (similarity_q.docs_rank_arrays) — skips even the
-    explode+dict-join pass the token_dict path pays."""
+    explode+dict-join pass the token_dict path pays.
+
+    Documents without tokens (empty, whitespace-only or null text) are
+    not ranked: like the oracle's ``canon`` CTE, only docs with at least
+    one token take a place in the sort order."""
+    arrs = arrs.filter(F.size("toks") > 0)
     canon = arrs.select("doc_id", F.concat_ws(" ", "toks").alias("ck"))
     rk = ranked_by(canon, ["ck", "doc_id"], "r").select("doc_id", "r")
     probes = rk.select(

@@ -334,3 +334,30 @@ def test_bridges_exact_against_unionfind(spark):
     assert np1 <= true_bridges
     assert confirmed == true_bridges  # exact on the smoke graph
     assert len(cand) > 0
+
+
+def test_snm_ignores_documents_without_tokens(spark):
+    """A whitespace-only document has no tokens, so like the oracle's
+    ``canon`` CTE the sorted-neighborhood pass must not rank it: adding
+    one to a small frame leaves the scored SNM pairs unchanged."""
+    from pyspark.sql import functions as F
+
+    from hive_similarity_join_spark.functions import text as TX
+    from hive_similarity_join_spark.queries.dedup_q import snm_scored_pairs_from
+
+    texts = [
+        (1, "scan join filter sort"),
+        (2, "scan join filter hash"),
+        (4, "stream window batch row"),
+        (5, "stream window batch vector"),
+        (6, "scan join sort merge"),
+    ]
+
+    def pairs(rows):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        arrs = docs.select("doc_id", F.array_sort(TX.set_tokens("text")).alias("toks"))
+        return sorted(tuple(r) for r in snm_scored_pairs_from(arrs, 3).collect())
+
+    base = pairs(texts)
+    assert base
+    assert pairs(texts + [(3, "  \t  ")]) == base

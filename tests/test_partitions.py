@@ -42,3 +42,93 @@ def test_spread_of_single_file_scan_reaches_parallelism(spark):
 def test_spread_keeps_an_already_spread_scan(spark):
     wide = spark.range(0, 100, 1, parallelism(spark))
     assert spread(wide) is wide
+
+
+def _final_plan_nodes(node):
+    """Every node of an executed (final AQE) plan, walking into query
+    stages, reused exchanges and nested adaptive plans."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        inner = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        inner = [node.plan()]
+    elif name == "ReusedExchange":
+        inner = [node.child()]
+    else:
+        inner = [node.children().apply(i) for i in range(node.children().size())]
+    for c in inner:
+        yield from _final_plan_nodes(c)
+
+
+def _child(node):
+    return node.children().apply(0)
+
+
+def _stacked_exchanges(df):
+    """Exchanges that re-shuffle an already-run shuffle stage: an
+    ``Exchange`` whose child is a ``ShuffleQueryStage``, directly or
+    through an ``AQEShuffleRead``."""
+    out = []
+    for n in _final_plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if n.nodeName() != "Exchange":
+            continue
+        c = _child(n)
+        if c.nodeName() == "AQEShuffleRead":
+            c = _child(c)
+        if c.nodeName() == "ShuffleQueryStage":
+            out.append(n.toString())
+    return out
+
+
+def _key_exchange_partitions(df, key: str) -> set[int]:
+    """Partition counts of the shuffles hash-partitioned on ``key``."""
+    return {
+        n.outputPartitioning().numPartitions()
+        for n in _final_plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "Exchange"
+        and f"hashpartitioning({key}" in n.outputPartitioning().toString()
+    }
+
+
+def _assert_placed_once(df, key: str) -> None:
+    assert df.collect()
+    assert _stacked_exchanges(df) == []
+    assert _key_exchange_partitions(df, key) == {parallelism(df)}
+
+
+def test_candidate_join_inputs_are_shuffled_once(spark):
+    """Over checkpointed (statistics-free) prepared relations, an
+    explicit-count join side that is a bare exchange is widened to
+    ``spark.sql.shuffle.partitions`` and, once AQE switches the join to
+    broadcast, shuffled again at the requested count on top. Sides
+    placed by ``hash_placed`` are shuffled once, at ``parallelism()``."""
+    from hive_similarity_join_spark.operators.dedup import minhash_lsh_pairs
+    from hive_similarity_join_spark.operators.similarity import similarity_join
+    from hive_similarity_join_spark.queries.dedup_q import docs_minhash_sigs
+    from hive_similarity_join_spark.queries.similarity_q import (
+        docs_rank_arrays,
+        rank_arrays_slice,
+    )
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != parallelism(spark)
+    docs = load_table(spark, SF_SMOKE, "documents")
+    self_join = similarity_join(
+        docs, "doc_id", "text", threshold=0.8,
+        sorted_rel=docs_rank_arrays(spark, SF_SMOKE),
+    )
+    _assert_placed_once(self_join, "_ptok")
+
+    left = docs.filter(F.col("source") < "src5")
+    right = docs.filter(F.col("source") >= "src5")
+    rs_join = similarity_join(
+        left, "doc_id", "text", threshold=0.7, other=right,
+        sorted_rel=rank_arrays_slice(spark, SF_SMOKE, left),
+        other_sorted_rel=rank_arrays_slice(spark, SF_SMOKE, right),
+    )
+    _assert_placed_once(rs_join, "_ptok")
+
+    lsh = minhash_lsh_pairs(
+        docs, "doc_id", "text", 0.8, sigs=docs_minhash_sigs(spark, SF_SMOKE)
+    )
+    _assert_placed_once(lsh, "_band")

@@ -6,6 +6,9 @@ changes operator internals gets its own test.
 
 from __future__ import annotations
 
+import threading
+import time
+
 from hive_similarity_join_spark.operators.cache import (
     release_session_pins,
     session_ckpt,
@@ -207,5 +210,75 @@ def test_session_ckpt_concurrent_same_name_builds_once(spark):
         assert calls["n"] == 1
         assert all(v is vals[0] for v in vals)
         assert vals[0].count() == 50
+    finally:
+        release_session_pins()
+
+
+def _run_daemon(fn) -> tuple[threading.Thread, list]:
+    """Start ``fn`` on a daemon thread (a hung build cannot block the
+    test process's exit); the list receives its result or exception."""
+    out: list = []
+
+    def run():
+        try:
+            out.append(fn())
+        except Exception as e:  # noqa: BLE001 - handed to the test
+            out.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    return t, out
+
+
+def test_generator_dependency_cycle_raises_not_hangs():
+    """Two generators whose builds read each other: the nested build
+    re-enters a name its own thread is still building. The per-name
+    lock is not reentrant, so this used to hang; it must raise a
+    ValueError naming the cycle."""
+    release_session_pins()
+
+    def build_a():
+        return {"a": session_state("t_cyc_b", "s", build_b)}
+
+    def build_b():
+        return {"b": session_state("t_cyc_a", "s", build_a)}
+
+    try:
+        t, out = _run_daemon(lambda: session_state("t_cyc_a", "s", build_a))
+        t.join(20)
+        assert not t.is_alive(), "cyclic generator builds deadlocked"
+        assert isinstance(out[0], ValueError)
+        assert "t_cyc_a -> t_cyc_b -> t_cyc_a" in str(out[0])
+    finally:
+        release_session_pins()
+
+
+def test_generator_dependency_cycle_across_threads_raises():
+    """The same cycle entered from both ends by two prefetch threads:
+    each holds one build lock and waits for the other's. The thread
+    whose wait would close the ring raises; the other then re-enters
+    its own build and raises too — neither hangs."""
+    release_session_pins()
+    holding = {"a": threading.Event(), "b": threading.Event()}
+
+    def build(mine: str, other: str):
+        def b():
+            holding[mine].set()
+            assert holding[other].wait(10)
+            time.sleep(0.1 if mine == "a" else 0.3)
+            return {mine: session_state(f"t_cyc2_{other}", "s", build(other, mine))}
+        return b
+
+    try:
+        runs = [
+            _run_daemon(lambda n=n, o=o: session_state(f"t_cyc2_{n}", "s", build(n, o)))
+            for n, o in (("a", "b"), ("b", "a"))
+        ]
+        for t, _ in runs:
+            t.join(20)
+        assert not any(t.is_alive() for t, _ in runs), "prefetch threads deadlocked"
+        for _, out in runs:
+            assert isinstance(out[0], ValueError)
+            assert "dependency cycle" in str(out[0])
     finally:
         release_session_pins()
