@@ -18,9 +18,11 @@ is unavoidable.
 from hive_similarity_join_spark.session import get_spark
 from hive_similarity_join_spark.sources.loader import TABLES, load_table, load_all, register_views
 from hive_similarity_join_spark.operators.similarity import (
+    Prepared,
     bag_jaccard_join,
     build_token_dict,
     containment_join,
+    prepare,
     similarity_join,
     tokenize,
     weighted_containment_join,
@@ -55,6 +57,8 @@ __all__ = [
     "weighted_containment_join",
     "weighted_jaccard_join",
     "build_token_dict",
+    "prepare",
+    "Prepared",
     "tokenize",
     # dedup family
     "minhash_signatures",

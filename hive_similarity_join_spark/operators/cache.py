@@ -70,58 +70,11 @@ def batch_pinned(
             pass  # session already stopped — nothing to release
 
 
-_SESSION_PINS: dict[str, tuple[str, DataFrame]] = {}
-
-
-def session_pin(name: str, scope: str, build) -> DataFrame:
-    """Session-lifetime pin for a TINY relation shared across builder
-    entries (the audit family's exact-pair denominator — VERDICT r11
-    item 4: five recall audits each re-ran the flagship t=0.8
-    self-join; now the first audit in a session materializes it once
-    and the rest reuse the cached relation).
-
-    Deliberately narrower than :func:`pin`:
-
-    - keyed by ``name`` with at most ONE live relation per name; a new
-      ``scope`` (different sf_dir or a new SparkSession applicationId)
-      releases the previous pin first, so the cache cannot accumulate
-      one relation per (key x sf_dir) the way the r8 per-key leak did;
-    - NOT released by :func:`release_pins` at builder entry — that is
-      the point: the relation outlives the builder that built it. Only
-      id-pair-sized relations (a few MB at sf0.1) belong here;
-    - self-healing: ``spark.catalog.clearCache()`` (the plan-gate
-      tripwire loop does this between keys) silently drops the cached
-      data AND its CacheManager registration, so the pin re-persists
-      whenever the tracked DataFrame reports StorageLevel NONE.
-
-    Correctness is unaffected either way — the relation is
-    deterministic (bit-exact oracle contract), so a dropped pin just
-    recomputes cold.
-    """
-    cur = _SESSION_PINS.get(name)
-    if cur is not None and cur[0] == scope:
-        df = cur[1]
-        try:
-            if df.storageLevel.useMemory or df.storageLevel.useDisk:
-                return df
-            df = df.persist()  # re-register after a clearCache()
-            _SESSION_PINS[name] = (scope, df)
-            return df
-        except Exception:
-            pass  # session died under us — rebuild below
-    if cur is not None:
-        # Drop the dict entry BEFORE build(): if build() raises, the
-        # tier must be empty for this name, or a later call with the
-        # old scope would resurrect and re-persist the stale relation
-        # (ADVICE r12).
-        del _SESSION_PINS[name]
-        try:
-            cur[1].unpersist()
-        except Exception:
-            pass  # stale session — nothing to release
-    df = build().persist()
-    _SESSION_PINS[name] = (scope, df)
-    return df
+def scope(spark, sf_dir: str) -> str:
+    """The ONE scope rule of the session tiers: a shared relation lives
+    for one (SparkSession application, ``sf_dir``) — a new session or a
+    different scale factor rebuilds it."""
+    return f"{spark.sparkContext.applicationId}:{sf_dir}"
 
 
 _SESSION_STATE: dict[str, tuple[str, object]] = {}
@@ -297,16 +250,14 @@ def _gate_state_value(name: str, val: object) -> None:
 
 def session_state(name: str, scope: str, build):
     """Session-lifetime memo for CHECKPOINT-BACKED trainer state shared
-    across builder entries (r16): where :func:`session_pin` caches one
-    DataFrame in the SQL cache (dropped by ``clearCache``, re-persisted
-    on demand), this tier holds an arbitrary structure of
+    across builder entries (r16): an arbitrary structure of
     ``localCheckpoint(eager=True)``-ed DataFrames — per-merge-round
     tokenizer vocabularies, winner relations — whose data lives as RDD
     blocks the SQL-cache clear never touches, so the bench's per-key
     ``clearCache`` cannot force a re-materialization.
 
-    Same discipline as session_pin: keyed by ``name`` with at most ONE
-    live value per name; a new ``scope`` (different sf_dir or a new
+    Keyed by ``name`` with at most ONE live value per name; a new
+    ``scope`` (:func:`scope`: a different sf_dir or a new
     applicationId) drops the previous value first; only vocab-sized /
     k-sized state belongs here (the checkpoint blocks are executor
     storage). Every stored relation is deterministic (bit-exact oracle
@@ -323,13 +274,14 @@ def session_state(name: str, scope: str, build):
 
 
 def session_ckpt(name: str, scope: str, build) -> DataFrame:
-    """Session-lifetime CHECKPOINT-BACKED shared relation (r16): like
-    :func:`session_pin`, but the built DataFrame is
-    ``localCheckpoint(eager=True)``-ed instead of SQL-cached. Measured
-    motivation: the bench/driver clears the SQL cache between keys, so
-    a session_pin's data is dropped and every consumer key re-runs the
-    full generator into the cache (q_dedup_near paid 14 s re-running a
-    t=0.9 kernel the previous key had just materialized); checkpoint
+    """Session-lifetime CHECKPOINT-BACKED shared relation (r16): the
+    built DataFrame is ``localCheckpoint(eager=True)``-ed, not
+    SQL-cached, under the same one-value-per-name, :func:`scope`-keyed
+    memo as :func:`session_state`. Measured motivation: the
+    bench/driver clears the SQL cache between keys, so a SQL-cached
+    shared relation's data is dropped and every consumer key re-runs
+    the full generator into the cache (q_dedup_near paid 14 s re-running
+    a t=0.9 kernel the previous key had just materialized); checkpoint
     blocks live in the block manager (MEMORY_AND_DISK), which
     ``clearCache`` does not touch, so the first consumer in a session
     pays generation once and every later key reads blocks.
@@ -357,18 +309,10 @@ def release_session_state() -> int:
 
 
 def release_session_pins() -> int:
-    """Unpersist every session pin (test teardown / explicit reset).
-    Also drops the session-state memos — callers use this as the one
-    full cross-key-cache reset."""
-    global _SESSION_PINS
-    release_session_state()
-    old, _SESSION_PINS = _SESSION_PINS, {}
-    for _, df in old.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return len(old)
+    """The one full cross-key-cache reset (test teardown / between
+    benchmark passes): drops every session-tier value, as
+    :func:`release_session_state` does."""
+    return release_session_state()
 
 
 def pin(df: DataFrame, storage_level=None) -> DataFrame:

@@ -18,6 +18,9 @@ Stages (all lazy Column expressions — no Python in the hot path):
   3. verification    — exact measure on full token sets via
                        ``array_intersect``/``array_union`` (set
                        semantics, matching Hive's set-similarity UDFs).
+Stage 1 and the rank-sort that opens stage 2 are ``prepare``: every
+kernel takes raw relations or ``Prepared`` sides, so one prepared
+corpus serves many kernel calls.
 
 Measures: jaccard / overlap / dice / cosine. Candidate generation always
 uses an equivalent-Jaccard lower bound t_eq (lossless conversions:
@@ -39,6 +42,7 @@ prefix scheme serves all measures; verification applies the exact measure.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
@@ -146,6 +150,194 @@ def _sorted_by_rank(rel: DataFrame, dict_df: DataFrame) -> DataFrame:
     )
 
 
+def _rarity_dict(*rels: DataFrame) -> DataFrame:
+    """(_tok, _rank, _w): the rarity-weight dictionary over the UNION
+    of the given tokenized relations — ONE global scale with integer
+    weight w = N_docs - df + 1 (a hapax weighs N, a token in every doc
+    weighs 1; in R-S forms a corpus-common token must not look rare
+    just because the batch is small). Rank is the distributed
+    rarest-first order; the corpus doc count joins in as a 1-row
+    broadcast (no driver action). Shared by every weighted join so the
+    weight formula lives in exactly one place."""
+    all_rel = rels[0]
+    for rel in rels[1:]:
+        all_rel = all_rel.unionByName(rel)
+    freq = (
+        all_rel.select(F.explode("_toks").alias("_tok"))
+        .groupBy("_tok")
+        .agg(F.count(F.lit(1)).alias("_df"))
+    )
+    ndocs = all_rel.agg(F.count(F.lit(1)).alias("_nd"))
+    return (
+        ranked_by(freq, ["_df", "_tok"], "_rank")
+        .crossJoin(F.broadcast(ndocs))
+        .select(
+            "_tok",
+            "_rank",
+            (F.col("_nd") - F.col("_df") + F.lit(1)).cast("long").alias("_w"),
+        )
+    )
+
+
+def _weighted_sorted(rel: DataFrame, dict_df: DataFrame) -> DataFrame:
+    """(_id, _rks, _ws, _sfx, _n, _tw) for one tokenized relation
+    against a shared weight dictionary: rank-sorted arrays with aligned
+    weights, suffix weights and total weight. Total weight is the first
+    suffix — no separate fold. Sorting structs orders by rank (first
+    field); weight and suffix ride along. See weighted_containment_join
+    for the linear suffix-sum construction notes."""
+    exploded = rel.select("_id", F.explode("_toks").alias("_tok"))
+    joined = exploded.join(F.broadcast(dict_df), "_tok")
+    w_sfx = (
+        Window.partitionBy("_id")
+        .orderBy(F.desc("_rank"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        joined.select("_id", "_rank", "_w")
+        .withColumn("_sfx", F.sum("_w").over(w_sfx))
+        .groupBy("_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_rank"), F.col("_w"), F.col("_sfx")))
+            ).alias("_rw")
+        )
+        .select(
+            "_id",
+            F.col("_rw._rank").alias("_rks"),
+            F.col("_rw._w").alias("_ws"),
+            F.col("_rw._sfx").alias("_sfx"),
+        )
+        .withColumn("_n", F.size("_rks"))
+        .withColumn("_tw", F.element_at("_sfx", 1))
+    )
+
+
+@dataclass(frozen=True)
+class Prepared:
+    """One join side after stages 1 and 2a: the rank-sorted relation
+    (_id, _rks, _n), or with ``weighted`` the weighted-sorted relation
+    (_id, _rks, _ws, _sfx, _n, _tw) of the weighted kernels. Built by
+    :func:`prepare`; every kernel takes it in place of a raw DataFrame
+    and then skips its own preparation."""
+
+    rel: DataFrame
+    weighted: bool = False
+
+    def slice(self, ids: DataFrame) -> Prepared:
+        """This side restricted to ``ids``, a one-column relation of the
+        ids to keep — a broadcast semi-join (node-sized). Per-doc rows
+        depend only on (corpus, dictionary), not on which other docs
+        are present, so slices of one prepared corpus are what an
+        inline build over that corpus's dictionary gives: when the
+        sides partition the corpus, a kernel over its slices returns
+        exactly the rows of the raw R-S call. The weighted flavour
+        needs that partition (its weights enter the results); the
+        rank-sorted one only needs the dictionary to cover both sides."""
+        keep = F.broadcast(ids.toDF("_id"))
+        return Prepared(self.rel.join(keep, "_id", "left_semi"), self.weighted)
+
+
+def prepare(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    *,
+    other: DataFrame | None = None,
+    tokens_col: str | None = None,
+    weighted: bool = False,
+    dictionary: DataFrame | None = None,
+    persist: bool = True,
+) -> Prepared | tuple[Prepared, Prepared]:
+    """Stages 1 and 2a, the one preparation seam of the four kernels:
+    tokenize ``text_col`` (or read the token arrays in ``tokens_col``)
+    -> global dictionary -> per-doc rank-sorted arrays. Returns the
+    prepared ``df``; with ``other``, the (R, S) pair over ONE dictionary
+    built from both relations, so no token silently vanishes from
+    either side. ``weighted`` prepares the rarity-weighted flavour
+    (w = N_docs - df + 1) that ``weighted_containment_join`` and
+    ``weighted_jaccard_join`` read.
+
+    A prepared relation depends only on (corpus, dictionary), not on
+    threshold or measure, so every same-corpus kernel run can share it,
+    and R-S sides or subsets can take :meth:`Prepared.slice` of it.
+
+    ``dictionary``: a prebuilt dictionary — (_tok, _rank) from
+    :func:`build_token_dict`, or (_tok, _rank, _w) when ``weighted`` —
+    the steady-state shape for REPEATED joins over one corpus, where
+    recomputing the global frequency pass per query is a full-corpus
+    shuffle for an answer that never changes. It MUST cover every token
+    of the inputs: stage 2a inner-joins on _tok, so tokens absent from
+    it silently vanish from the token sets (changing results) rather
+    than erroring. Unweighted, any covering dictionary yields identical
+    pairs: the prefix/positional filters need only SOME global total
+    order, and verification intersects rank arrays (a bijection).
+    Weighted, the weights enter the RESULT, so the dictionary must be
+    built over exactly the relations the inline build would see.
+
+    Persistence (``persist=True`` default): each tokenized relation is
+    consumed twice (dictionary build, rank-sort) and each prepared one
+    up to four times (both prefix explodes + both verify sides);
+    without caching, Catalyst re-executes the tokenizer for every
+    consumer — ruinous when ``tokens_col`` is an expensive expression
+    (n-gram shingling). The reference family materializes exactly these
+    stage boundaries to HDFS between its MR jobs; we keep them in
+    executor storage (MEMORY_AND_DISK — spills, never OOMs, sized
+    O(corpus tokens) which at 100 TB is the same scratch the MR jobs
+    would write to disk anyway). The pinned stages are AQE-sized
+    (coalesced by bytes and skew-split, see the ``session`` module
+    docstring), so a consumer schedules one task per useful partition
+    rather than one per ``spark.sql.shuffle.partitions``. Pass
+    ``persist=False`` for a fully lazy plan (composition into larger
+    DAGs, single-consumer callers, builds that are checkpointed).
+    """
+
+    def keep(rel: DataFrame) -> DataFrame:
+        return pin(rel, StorageLevel.MEMORY_AND_DISK) if persist else rel
+
+    toks = [
+        keep(_tokenized(d, id_col, text_col, tokens_col))
+        for d in (df, other) if d is not None
+    ]
+    if dictionary is None:
+        dictionary = (_rarity_dict if weighted else _rank_tokens)(*toks)
+    sort = _weighted_sorted if weighted else _sorted_by_rank
+    sides = [Prepared(keep(sort(t, dictionary)), weighted) for t in toks]
+    return sides[0] if other is None else (sides[0], sides[1])
+
+
+def _sides(
+    df: DataFrame | Prepared,
+    other: DataFrame | Prepared | None,
+    weighted: bool,
+    **prep,
+) -> tuple[DataFrame, DataFrame]:
+    """(R, S) prepared relations of one kernel call; S is R for a
+    self-join. ``df`` and ``other`` are both raw DataFrames, prepared
+    here by :func:`prepare` with ``prep``, or both :class:`Prepared`
+    sides of the kernel's flavour. Anything else raises ``ValueError``:
+    a raw side next to a prepared one would be ranked by a different
+    dictionary, and a rank-sorted side lacks the weighted kernels'
+    weight columns."""
+    given = [side for side in (df, other) if side is not None]
+    if len({isinstance(side, Prepared) for side in given}) > 1:
+        raise ValueError(
+            "df and other must both be raw DataFrames or both Prepared "
+            "sides (prepare / Prepared.slice), not one of each"
+        )
+    if not isinstance(df, Prepared):
+        sides = prepare(df, other=other, weighted=weighted, **prep)
+        given = [sides] if other is None else list(sides)
+    for side in given:
+        if side.weighted != weighted:
+            flavour = "weighted" if weighted else "rank-sorted"
+            raise ValueError(
+                f"this kernel needs {flavour} Prepared sides "
+                f"(prepare(..., weighted={weighted}))"
+            )
+    return given[0].rel, given[-1].rel
+
+
 def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFrame:
     """Stage 2b: emit prefix tokens with their 0-based position (for the
     PPJoin positional filter).
@@ -186,14 +378,22 @@ def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFr
     )
 
 
-def _all_salts(n_salts: int) -> Column:
+# Salts per candidate join. A measured sweep at sf0.1 (4/8/16/32 salts
+# -> ~5.6/5.1/4.2/3.8 s flagship) showed more salts keep paying up to
+# the local core count; the cost is a-side replication (prefix rows
+# only), so the ceiling should stay well below shuffle parallelism on a
+# large cluster rather than track it.
+N_SALTS = 32
+
+
+def _all_salts() -> Column:
     """Probe-side salt: every prefix row is replicated across all salts."""
-    return F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+    return F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)]))
 
 
-def _one_salt(n_salts: int) -> Column:
+def _one_salt() -> Column:
     """Index-side salt: each row lands on exactly one salt, by its id."""
-    return F.pmod(F.hash(F.col("_id")), F.lit(n_salts))
+    return F.pmod(F.hash(F.col("_id")), F.lit(N_SALTS))
 
 
 def _placed_side(
@@ -210,72 +410,29 @@ def _placed_side(
     )
 
 
-def _prepared_sides(
-    sorted_rel: DataFrame,
-    other: DataFrame | None,
-    other_sorted_rel: DataFrame | None,
-) -> tuple[DataFrame, DataFrame]:
-    """(R, S) prepared relations for a call through the ``sorted_rel=``
-    seam. An R-S call (``other`` given) must pass both sides: falling
-    back to ``sorted_rel`` for S would silently self-join R."""
-    if other is not None and other_sorted_rel is None:
-        raise ValueError(
-            "other= with sorted_rel= needs other_sorted_rel= as well "
-            "(the prepared S side); without it the call would self-join R"
-        )
-    return sorted_rel, (
-        other_sorted_rel if other_sorted_rel is not None else sorted_rel
-    )
-
-
 def similarity_join(
-    df: DataFrame,
-    id_col: str,
+    df: DataFrame | Prepared,
+    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
     measure: str = "jaccard",
-    other: DataFrame | None = None,
-    other_id_col: str | None = None,
-    other_text_col: str | None = None,
+    other: DataFrame | Prepared | None = None,
     tokens_col: str | None = None,
-    n_salts: int = 32,
     persist: bool = True,
-    token_dict: DataFrame | None = None,
-    sorted_rel: DataFrame | None = None,
-    other_sorted_rel: DataFrame | None = None,
 ) -> DataFrame:
     """Exact set-similarity join; returns (id1, id2, sim).
 
-    ``sorted_rel`` / ``other_sorted_rel`` (r17 sharing seam): prebuilt
-    rank-sorted relations — the ``_sorted_by_rank`` output (_id, _rks,
-    _n) for ``df`` / ``other`` against ONE covering dictionary. The
-    relation depends only on (corpus, dictionary), not on threshold or
-    measure, so every same-corpus kernel run shares it; per-doc rows
-    are side-independent, so a corpus-wide relation restricted to each
-    side's ids is exactly what the inline build produces. When given,
-    the tokenize/dictionary/sort stages are skipped entirely. An R-S
-    call must pass both: ``other`` with ``sorted_rel`` but without
-    ``other_sorted_rel`` raises ``ValueError``.
+    ``df`` / ``other``: raw relations, prepared here by :func:`prepare`
+    (``id_col``, ``text_col``, ``tokens_col`` and ``persist`` are its
+    arguments; both sides share one dictionary), or rank-sorted
+    :class:`Prepared` sides — a shared prepared corpus or its
+    :meth:`Prepared.slice` — when the tokenize/dictionary/sort stages
+    are skipped entirely. Mixing one raw and one prepared side raises
+    ``ValueError``.
 
     Self-join (``other is None``): all pairs with id1 < id2 (canonical
     orientation, SURVEY §7) and measure >= threshold.
     R-S join: pairs (id1 from df, id2 from other), no id ordering.
-
-    Persistence (``persist=True`` default): the tokenized relation is
-    consumed twice (dictionary build, rank-sort) and the rank-sorted
-    relation up to four times (both prefix explodes + both verify
-    sides); without caching, Catalyst re-executes the tokenizer for
-    every consumer — ruinous when ``tokens_col`` is an expensive
-    expression (n-gram shingling). The reference family materializes
-    exactly these stage boundaries to HDFS between its MR jobs; we keep
-    them in executor storage (MEMORY_AND_DISK — spills, never OOMs,
-    sized O(corpus tokens) which at 100 TB is the same scratch the MR
-    jobs would write to disk anyway). The pinned stages are AQE-sized
-    (coalesced by bytes and skew-split, see the ``session`` module
-    docstring), so a consumer schedules one task per useful partition
-    rather than one per ``spark.sql.shuffle.partitions``. Pass
-    ``persist=False`` for a fully lazy plan (composition into larger
-    DAGs, single-consumer callers).
 
     Partitioning (the load-bearing scale decision): a few-partition
     input is spread to one task per core before tokenizing
@@ -284,16 +441,11 @@ def similarity_join(
     so both sides are placed with an EXPLICIT partition count
     (``partitions.hash_placed``; its module docstring says why, and
     when such a count holds) on (prefix token, salt): the b-side picks
-    ``salt = hash(id) % n_salts`` and the a-side replicates each prefix
+    ``salt = hash(id) % N_SALTS`` and the a-side replicates each prefix
     row across all salts, splitting every hot token's candidate block
-    across n_salts partitions — frequent-token skew (the Hive
+    across N_SALTS partitions — frequent-token skew (the Hive
     reference's ``hive.optimize.skewjoin`` concern) is handled in the
-    plan itself rather than by runtime rescue. Default 32: a measured
-    sweep at sf0.1 (4/8/16/32 -> ~5.6/5.1/4.2/3.8s flagship) shows
-    more salts keep paying up to the local core count; the cost is
-    a-side replication (prefix rows only), so the ceiling should stay
-    well below shuffle parallelism on a large cluster rather than
-    track it.
+    plan itself rather than by runtime rescue.
     """
     if measure not in MEASURES:
         raise ValueError(f"measure must be one of {MEASURES}, got {measure!r}")
@@ -301,42 +453,10 @@ def similarity_join(
         t_eq = None  # absolute overlap: prefix p = n - c + 1
     else:
         t_eq = _equivalent_jaccard_threshold(threshold, measure)
-
-    from pyspark import StorageLevel
-
-    if sorted_rel is not None:
-        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
-    else:
-        r = _tokenized(df, id_col, text_col, tokens_col)
-        if persist:
-            r = pin(r, StorageLevel.MEMORY_AND_DISK)
-        rels = [r]
-        if other is not None:
-            s = _tokenized(
-                other, other_id_col or id_col, other_text_col or text_col,
-                tokens_col,
-            )
-            if persist:
-                s = pin(s, StorageLevel.MEMORY_AND_DISK)
-            rels.append(s)
-
-        # ``token_dict``: a prebuilt (_tok, _rank) dictionary (see
-        # build_token_dict) — the steady-state shape for REPEATED joins
-        # over one corpus, where recomputing the global frequency pass
-        # per query is a full-corpus shuffle for an answer that never
-        # changes. The dict MUST come from the same corpus: stage 2a
-        # inner-joins on _tok, so tokens absent from the dictionary
-        # silently vanish from the token sets (changing results) rather
-        # than erroring.
-        dict_df = token_dict if token_dict is not None else _rank_tokens(*rels)
-        r_sorted = _sorted_by_rank(r, dict_df)
-        if persist:
-            r_sorted = pin(r_sorted, StorageLevel.MEMORY_AND_DISK)
-        s_sorted = (
-            r_sorted if other is None else _sorted_by_rank(rels[1], dict_df)
-        )
-        if persist and other is not None:
-            s_sorted = pin(s_sorted, StorageLevel.MEMORY_AND_DISK)
+    r_sorted, s_sorted = _sides(
+        df, other, False,
+        id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
+    )
 
     if measure == "overlap":
         c = int(math.ceil(threshold))
@@ -363,8 +483,8 @@ def similarity_join(
         a = _prefix_exploded(r_sorted, t_eq, short=(other is None))
         b = _prefix_exploded(s_sorted, t_eq)
 
-    a = _placed_side(a, _all_salts(n_salts), 1)
-    b = _placed_side(b, _one_salt(n_salts), 2)
+    a = _placed_side(a, _all_salts(), 1)
+    b = _placed_side(b, _one_salt(), 2)
 
     cond = [
         F.col("_ptok1") == F.col("_ptok2"),
@@ -536,20 +656,14 @@ def bag_jaccard_join(
 
 
 def containment_join(
-    df: DataFrame,
-    id_col: str,
+    df: DataFrame | Prepared,
+    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.9,
     tokens_col: str | None = None,
-    n_salts: int = 32,
     persist: bool = True,
     min_size_ratio: float | None = None,
-    other: DataFrame | None = None,
-    other_id_col: str | None = None,
-    other_text_col: str | None = None,
-    token_dict: DataFrame | None = None,
-    sorted_rel: DataFrame | None = None,
-    other_sorted_rel: DataFrame | None = None,
+    other: DataFrame | Prepared | None = None,
 ) -> DataFrame:
     """Asymmetric set-CONTAINMENT self-join: ordered pairs (id1, id2),
     id1 != id2, with |T1 ∩ T2| / |T1| >= threshold — "id1 is (mostly)
@@ -593,7 +707,7 @@ def containment_join(
     Scale shape: the index side is the corpus inverted index — linear
     in corpus tokens, the same relation the dictionary pass already
     shuffles — and the probe side is prefix rows only (~(1-t) of corpus
-    tokens), salted x``n_salts`` against hot tokens exactly like
+    tokens), salted x``N_SALTS`` against hot tokens exactly like
     ``similarity_join`` (same explicit placement,
     ``partitions.hash_placed``). The
     candidate blowup is bounded by sum over probe-prefix tokens of that
@@ -609,46 +723,18 @@ def containment_join(
     ingest screen. The id1 != id2 clause is dropped; the token
     dictionary is built over BOTH relations so no token silently
     vanishes from either side's rank arrays.
-    """
-    # ``sorted_rel`` / ``other_sorted_rel``: prebuilt rank-sorted
-    # relations — same seam and proof as similarity_join's (the
-    # relation depends only on (corpus, dictionary)).
-    if sorted_rel is not None:
-        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
-    else:
-        r = _tokenized(df, id_col, text_col, tokens_col)
-        if persist:
-            r = pin(r, StorageLevel.MEMORY_AND_DISK)
-        rels = [r]
-        if other is not None:
-            s = _tokenized(
-                other, other_id_col or id_col, other_text_col or text_col,
-                tokens_col,
-            )
-            if persist:
-                s = pin(s, StorageLevel.MEMORY_AND_DISK)
-            rels.append(s)
-        # ``token_dict``: a prebuilt (_tok, _rank) dictionary — same
-        # contract as similarity_join's: it must cover every token of
-        # both relations (tokens absent from it silently vanish from the
-        # rank arrays). Losslessness of the prefix/positional filters
-        # needs only SOME global total order, and verification
-        # intersects rank arrays (a bijection), so any covering
-        # dictionary yields identical pairs.
-        dict_df = token_dict if token_dict is not None else _rank_tokens(*rels)
-        r_sorted = _sorted_by_rank(r, dict_df)
-        if persist:
-            r_sorted = pin(r_sorted, StorageLevel.MEMORY_AND_DISK)
-        s_sorted = (
-            r_sorted if other is None else _sorted_by_rank(rels[1], dict_df)
-        )
-        if persist and other is not None:
-            s_sorted = pin(s_sorted, StorageLevel.MEMORY_AND_DISK)
 
-    probe = _placed_side(_prefix_exploded(r_sorted, threshold), _all_salts(n_salts), 1)
+    Sides are raw or rank-sorted :class:`Prepared`, as for
+    ``similarity_join``.
+    """
+    r_sorted, s_sorted = _sides(
+        df, other, False,
+        id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
+    )
+    probe = _placed_side(_prefix_exploded(r_sorted, threshold), _all_salts(), 1)
     index = _placed_side(
         s_sorted.select("_id", "_n", F.posexplode("_rks").alias("_pp", "_ptok")),
-        _one_salt(n_salts),
+        _one_salt(),
         2,
     )
 
@@ -686,81 +772,15 @@ def containment_join(
     )
 
 
-def _rarity_dict(*rels: DataFrame) -> DataFrame:
-    """(_tok, _rank, _w): the rarity-weight dictionary over the UNION
-    of the given tokenized relations — ONE global scale with integer
-    weight w = N_docs - df + 1 (a hapax weighs N, a token in every doc
-    weighs 1; in R-S forms a corpus-common token must not look rare
-    just because the batch is small). Rank is the distributed
-    rarest-first order; the corpus doc count joins in as a 1-row
-    broadcast (no driver action). Shared by every weighted join so the
-    weight formula lives in exactly one place."""
-    all_rel = rels[0]
-    for rel in rels[1:]:
-        all_rel = all_rel.unionByName(rel)
-    freq = (
-        all_rel.select(F.explode("_toks").alias("_tok"))
-        .groupBy("_tok")
-        .agg(F.count(F.lit(1)).alias("_df"))
-    )
-    ndocs = all_rel.agg(F.count(F.lit(1)).alias("_nd"))
-    return (
-        ranked_by(freq, ["_df", "_tok"], "_rank")
-        .crossJoin(F.broadcast(ndocs))
-        .select(
-            "_tok",
-            "_rank",
-            (F.col("_nd") - F.col("_df") + F.lit(1)).cast("long").alias("_w"),
-        )
-    )
-
-
-def _weighted_sorted(rel: DataFrame, dict_df: DataFrame) -> DataFrame:
-    """(_id, _rks, _ws, _sfx, _n, _tw) for one tokenized relation
-    against a shared weight dictionary — see weighted_containment_join
-    for the linear suffix-sum construction notes."""
-    exploded = rel.select("_id", F.explode("_toks").alias("_tok"))
-    joined = exploded.join(F.broadcast(dict_df), "_tok")
-    w_sfx = (
-        Window.partitionBy("_id")
-        .orderBy(F.desc("_rank"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        joined.select("_id", "_rank", "_w")
-        .withColumn("_sfx", F.sum("_w").over(w_sfx))
-        .groupBy("_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_rank"), F.col("_w"), F.col("_sfx")))
-            ).alias("_rw")
-        )
-        .select(
-            "_id",
-            F.col("_rw._rank").alias("_rks"),
-            F.col("_rw._w").alias("_ws"),
-            F.col("_rw._sfx").alias("_sfx"),
-        )
-        .withColumn("_n", F.size("_rks"))
-        .withColumn("_tw", F.element_at("_sfx", 1))
-    )
-
-
 def weighted_containment_join(
-    df: DataFrame,
-    id_col: str,
+    df: DataFrame | Prepared,
+    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.9,
     tokens_col: str | None = None,
-    n_salts: int = 32,
     persist: bool = True,
     min_weight_ratio: float | None = None,
-    other: DataFrame | None = None,
-    other_id_col: str | None = None,
-    other_text_col: str | None = None,
-    rarity_dict: DataFrame | None = None,
-    sorted_rel: DataFrame | None = None,
-    other_sorted_rel: DataFrame | None = None,
+    other: DataFrame | Prepared | None = None,
 ) -> DataFrame:
     """Rarity-WEIGHTED containment self-join: ordered pairs (id1, id2),
     id1 != id2, with ``sum of w(t) over shared tokens / total w(id1)
@@ -805,6 +825,10 @@ def weighted_containment_join(
     rarity scale — a corpus-common token must not look rare just
     because the batch is small).
 
+    Sides are raw, prepared here by :func:`prepare` with
+    ``weighted=True``, or weighted :class:`Prepared` sides; a
+    rank-sorted one raises ``ValueError``.
+
     Suffix weights are LINEAR per document: a running window sum over
     (id, rank DESC) on the still-exploded token relation, collected
     into the per-doc arrays in the same groupBy — the window and the
@@ -816,118 +840,17 @@ def weighted_containment_join(
     Scale shape: identical to containment_join — the dictionary (now
     carrying df-derived weights, built with a 1-row broadcast of the
     corpus doc count, never a collect) broadcasts; probe prefixes are
-    salted x``n_salts`` and placed by ``partitions.hash_placed``; the
+    salted x``N_SALTS`` and placed by ``partitions.hash_placed``; the
     index side is the linear inverted index. Rarity weighting makes
     prefixes concentrate on rare tokens — the same frequency skew
     defense as the unweighted rarest-first order, but now the filter
     bound itself adapts to how much evidence each token carries.
     """
-    # ``sorted_rel`` / ``other_sorted_rel`` (r17 sharing seam): prebuilt
-    # weighted-sorted relations — the ``_weighted_sorted`` output for
-    # ``df`` / ``other`` against the ONE shared rarity scale. The
-    # (_id, _rks, _ws, _sfx, _n, _tw) build is the expensive common
-    # stage of the weighted trio, and its rows are per-doc-independent,
-    # so a corpus-wide relation restricted to each side's ids is
-    # exactly what the inline build produces (the weights enter
-    # results, so the scale must still be the union corpus — same
-    # contract as rarity_dict). When given, the tokenize/dict/sort
-    # stages are skipped entirely.
-    if sorted_rel is not None:
-        r_sorted, s_sorted = _prepared_sides(sorted_rel, other, other_sorted_rel)
-        return _weighted_containment_core(
-            r_sorted, s_sorted, threshold, n_salts,
-            rs=other is not None or other_sorted_rel is not None,
-            min_weight_ratio=min_weight_ratio,
-        )
-    r = _tokenized(df, id_col, text_col, tokens_col)
-    if persist:
-        r = pin(r, StorageLevel.MEMORY_AND_DISK)
-    s = None
-    if other is not None:
-        s = _tokenized(
-            other, other_id_col or id_col, other_text_col or text_col, tokens_col
-        )
-        if persist:
-            s = pin(s, StorageLevel.MEMORY_AND_DISK)
-
-    # ``rarity_dict``: a prebuilt (_tok, _rank, _w) weight dictionary.
-    # UNLIKE the unweighted token_dict, the weights enter the RESULT
-    # (w = N_docs - df + 1), so it must be built over exactly the same
-    # corpus the in-line _rarity_dict would see (here: the union of
-    # both relations) — callers pass the full-documents dictionary only
-    # for joins whose relations partition the documents table.
-    dict_df = (
-        rarity_dict
-        if rarity_dict is not None
-        else _rarity_dict(*(rel for rel in (r, s) if rel is not None))
+    r_sorted, s_sorted = _sides(
+        df, other, True,
+        id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
     )
-
-    # Rank-sorted arrays with aligned weights, suffix weights and total
-    # weight (_weighted_sorted). Suffix weights (_sfx[i] = sum of
-    # _ws[i..end]) come from a LINEAR running sum over (_id, rank DESC)
-    # computed BEFORE the collect — the window's hash partitioning on
-    # _id is exactly the groupBy's, so Catalyst inserts no second
-    # exchange (one shuffle total, same as the unweighted kernel;
-    # .explain shows a single Exchange feeding Window -> Sort ->
-    # HashAggregate). Total weight is the first suffix — no separate
-    # fold. Sorting structs orders by rank (first field); weight and
-    # suffix ride along.
-    r_sorted = _weighted_sorted(r, dict_df)
-    if persist:
-        r_sorted = pin(r_sorted, StorageLevel.MEMORY_AND_DISK)
-    s_sorted = r_sorted if s is None else _weighted_sorted(s, dict_df)
-    if persist and s is not None:
-        s_sorted = pin(s_sorted, StorageLevel.MEMORY_AND_DISK)
-    return _weighted_containment_core(
-        r_sorted, s_sorted, threshold, n_salts,
-        rs=other is not None, min_weight_ratio=min_weight_ratio,
-    )
-
-
-def _weighted_sides(
-    r_sorted: DataFrame, s_sorted: DataFrame, rate: float, n_salts: int
-) -> tuple[DataFrame, DataFrame]:
-    """Placed (probe, index) inputs of the weighted candidate joins.
-
-    Probe rows: ``r_sorted``'s tokens whose suffix weight still reaches
-    ``rate * _tw1`` (the weighted prefix), salted x``n_salts``, as
-    (id1, _tw1, _ptok1, _wtok1, _nxt1, _salt1). Index rows: every token
-    of ``s_sorted`` as (id2, _tw2, _ptok2, _nxt2, _salt2). ``_nxt`` is
-    the weight after the token (its suffix weight minus its own)."""
-
-    def tokens(rel: DataFrame) -> DataFrame:
-        return rel.select(
-            "_id", "_tw",
-            F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
-        ).select(
-            "_id", "_tw", "_z",
-            F.col("_z._rks").alias("_ptok"),
-            F.col("_z._ws").alias("_wtok"),
-            (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt"),
-        )
-
-    alpha = F.col("_tw").cast("double") * rate - 1e-9
-    probe = _placed_side(
-        tokens(r_sorted).filter(F.col("_z._sfx").cast("double") >= alpha),
-        _all_salts(n_salts), 1, ("_id", "_tw", "_ptok", "_wtok", "_nxt"),
-    )
-    index = _placed_side(
-        tokens(s_sorted), _one_salt(n_salts), 2, ("_id", "_tw", "_ptok", "_nxt")
-    )
-    return probe, index
-
-
-def _weighted_containment_core(
-    r_sorted: DataFrame,
-    s_sorted: DataFrame,
-    threshold: float,
-    n_salts: int,
-    rs: bool,
-    min_weight_ratio: float | None,
-) -> DataFrame:
-    """Candidate generation + verify of ``weighted_containment_join``
-    over prebuilt weighted-sorted relations."""
-    probe, index = _weighted_sides(r_sorted, s_sorted, threshold, n_salts)
+    probe, index = _weighted_sides(r_sorted, s_sorted, threshold)
 
     alpha = F.col("_tw1").cast("double") * threshold - 1e-9
     pos_bound = (
@@ -939,7 +862,7 @@ def _weighted_containment_core(
         & (F.col("_tw2").cast("double") >= alpha)
         & (pos_bound >= alpha)
     )
-    if not rs:
+    if other is None:
         join_cond = join_cond & (F.col("id1") != F.col("id2"))
     if min_weight_ratio is not None:
         join_cond = join_cond & (
@@ -976,6 +899,39 @@ def _weighted_containment_core(
     )
 
 
+def _weighted_sides(
+    r_sorted: DataFrame, s_sorted: DataFrame, rate: float
+) -> tuple[DataFrame, DataFrame]:
+    """Placed (probe, index) inputs of the weighted candidate joins.
+
+    Probe rows: ``r_sorted``'s tokens whose suffix weight still reaches
+    ``rate * _tw1`` (the weighted prefix), salted x``N_SALTS``, as
+    (id1, _tw1, _ptok1, _wtok1, _nxt1, _salt1). Index rows: every token
+    of ``s_sorted`` as (id2, _tw2, _ptok2, _nxt2, _salt2). ``_nxt`` is
+    the weight after the token (its suffix weight minus its own)."""
+
+    def tokens(rel: DataFrame) -> DataFrame:
+        return rel.select(
+            "_id", "_tw",
+            F.posexplode(F.arrays_zip("_rks", "_ws", "_sfx")).alias("_p", "_z"),
+        ).select(
+            "_id", "_tw", "_z",
+            F.col("_z._rks").alias("_ptok"),
+            F.col("_z._ws").alias("_wtok"),
+            (F.col("_z._sfx") - F.col("_z._ws")).alias("_nxt"),
+        )
+
+    alpha = F.col("_tw").cast("double") * rate - 1e-9
+    probe = _placed_side(
+        tokens(r_sorted).filter(F.col("_z._sfx").cast("double") >= alpha),
+        _all_salts(), 1, ("_id", "_tw", "_ptok", "_wtok", "_nxt"),
+    )
+    index = _placed_side(
+        tokens(s_sorted), _one_salt(), 2, ("_id", "_tw", "_ptok", "_nxt")
+    )
+    return probe, index
+
+
 def build_token_dict(
     df: DataFrame,
     id_col: str,
@@ -985,10 +941,10 @@ def build_token_dict(
 ) -> DataFrame:
     """Materialize the kernel's stage-1 token dictionary: the global
     rarest-first (_tok, _rank) relation for ``df``. Pass the result (or
-    ``spark.read.parquet(path)``) to ``similarity_join(token_dict=...)``
-    to skip the per-query frequency pass — the catalog-table shape for
-    a corpus that is joined repeatedly. The dictionary is only valid
-    for the corpus (and tokenizer) it was built from.
+    ``spark.read.parquet(path)``) to ``prepare(dictionary=...)`` to skip
+    the per-query frequency pass — the catalog-table shape for a corpus
+    that is joined repeatedly. The dictionary is only valid for the
+    corpus (and tokenizer) it was built from.
     """
     rel = _tokenized(df, id_col, text_col, tokens_col)
     d = _rank_tokens(rel)
@@ -999,15 +955,12 @@ def build_token_dict(
 
 
 def weighted_jaccard_join(
-    df: DataFrame,
-    id_col: str,
+    df: DataFrame | Prepared,
+    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.9,
     tokens_col: str | None = None,
-    n_salts: int = 32,
     persist: bool = True,
-    rarity_dict: DataFrame | None = None,
-    sorted_rel: DataFrame | None = None,
 ) -> DataFrame:
     """Rarity-WEIGHTED Jaccard self-join: ordered pairs (id1, id2) with
     ``sum w over shared tokens / sum w over the union >= threshold``,
@@ -1043,23 +996,15 @@ def weighted_jaccard_join(
     ``partitions.hash_placed`` placement and broadcast dictionary as
     ``weighted_containment_join``; rarest-first ranks keep probe
     prefixes on rare tokens, which is what bounds the candidate space
-    at 100 TB.
+    at 100 TB. ``df`` is raw or a weighted :class:`Prepared`, as for
+    ``weighted_containment_join``.
     """
-    # sorted_rel contract: see weighted_containment_join (r17 seam).
-    if sorted_rel is not None:
-        r_sorted = sorted_rel
-    else:
-        r = _tokenized(df, id_col, text_col, tokens_col)
-        if persist:
-            r = pin(r, StorageLevel.MEMORY_AND_DISK)
-        # rarity_dict contract: see weighted_containment_join.
-        dict_df = _rarity_dict(r) if rarity_dict is None else rarity_dict
-        r_sorted = _weighted_sorted(r, dict_df)
-        if persist:
-            r_sorted = pin(r_sorted, StorageLevel.MEMORY_AND_DISK)
-
+    r_sorted, _ = _sides(
+        df, None, True,
+        id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
+    )
     tt = threshold / (1.0 + threshold)
-    probe, index = _weighted_sides(r_sorted, r_sorted, 2.0 * tt, n_salts)
+    probe, index = _weighted_sides(r_sorted, r_sorted, 2.0 * tt)
 
     alpha = (
         (F.col("_tw1") + F.col("_tw2")).cast("double") * F.lit(tt) - 1e-9

@@ -88,13 +88,12 @@ def docs_minhash_sigs(spark, sf_dir):
     docstring has the identity argument), so building this relation no
     longer re-derives the frequency ranking either. Node-sized (one
     wide row per doc); degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.queries.similarity_q import docs_token_dict
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "docs_minhash_sigs",
-        scope,
+        scope(spark, sf_dir),
         lambda: minhash_signatures(
             load_table(spark, sf_dir, "documents"),
             "doc_id",
@@ -107,16 +106,15 @@ def docs_minhash_sigs(spark, sf_dir):
 
 def lsh_pair_graph(spark, sf_dir):
     """The production MinHash-LSH pair relation (id1, id2, sim) at
-    t=MINHASH_T, SESSION-pinned like exact_pair_graph: the flagship
-    dedup key and its recall audit both need it, so whichever runs
-    first in a session materializes it once (~20 MB at sf0.1). Same
-    degrade-to-recompute contract — see exact_pair_graph."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    t=MINHASH_T, session-checkpointed like exact_pair_graph: the
+    flagship dedup key and its recall audit both need it, so whichever
+    runs first in a session materializes it once (~20 MB at sf0.1).
+    Same degrade-to-recompute contract — see exact_pair_graph."""
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "lsh_pair_graph_t08",
-        scope,
+        scope(spark, sf_dir),
         lambda: minhash_lsh_pairs(
             load_table(spark, sf_dir, "documents"),
             "doc_id",
@@ -136,12 +134,11 @@ def lsh_cc_labels(spark, sf_dir):
     identical content, _ranked_tokens dedupes post-explode, verified
     bit-exact against the unchanged oracles). Node-sized relation;
     degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "lsh_cc_labels_t08",
-        scope,
+        scope(spark, sf_dir),
         lambda: connected_components(
             lsh_pair_graph(spark, sf_dir).select("id1", "id2")
         ),
@@ -188,12 +185,11 @@ def simhash_fps(spark, sf_dir):
     side shares no exchange with its probe side), i.e. four ~2 s corpus
     aggregations per session for one 5k-row relation. Node-sized;
     degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "simhash_fps",
-        scope,
+        scope(spark, sf_dir),
         lambda: simhash_fingerprints(
             load_table(spark, sf_dir, "documents"), "doc_id", "text"
         ),
@@ -204,12 +200,11 @@ def simhash_pair_graph(spark, sf_dir):
     """Session-pinned narrow (Hamming <= 3) SimHash pair relation —
     shared by q_text_simhash and q_dedup_simhash_recall, same contract
     as exact_pair_graph."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "simhash_pair_graph_h3",
-        scope,
+        scope(spark, sf_dir),
         lambda: simhash_pairs(
             load_table(spark, sf_dir, "documents"),
             "doc_id",
@@ -224,12 +219,11 @@ def simhash_wide_pair_graph(spark, sf_dir):
     """Session-pinned wide (Hamming <= 8) SimHash pair relation —
     shared by q_text_simhash_wide, q_dedup_simhash_wide_recall and the
     blocking ensemble, same contract as exact_pair_graph."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "simhash_wide_pair_graph_h8",
-        scope,
+        scope(spark, sf_dir),
         lambda: simhash_pairs_wide(
             load_table(spark, sf_dir, "documents"),
             "doc_id",
@@ -771,7 +765,7 @@ def elsh_pair_graph(spark, sf_dir):
     q_dedup_threshold_curve (two aggregates over them) each re-ran the
     bucketed join + exact-cosine verify (~2 s at sf0.1). Id-pair-sized;
     degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
     def build():
         from hive_similarity_join_spark.functions import vectors as V
@@ -797,8 +791,7 @@ def elsh_pair_graph(spark, sf_dir):
             .filter(F.col("sim") >= 0.3)
         )
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("elsh_pair_graph", scope, build)
+    return session_ckpt("elsh_pair_graph", scope(spark, sf_dir), build)
 
 
 @query("q_dedup_embedding_lsh", oracle=_ELSH_ORACLE)
@@ -2316,13 +2309,12 @@ def ngram_cc_labels(spark, sf_dir):
     whichever runs first in a session now materializes the node-sized
     label table once. Degrade after a clearCache is recompute, never a
     different answer (CC is deterministic on a deterministic graph)."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.queries.text_q import ngram_pair_graph
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "ngram_cc_labels",
-        scope,
+        scope(spark, sf_dir),
         lambda: connected_components(
             ngram_pair_graph(spark, sf_dir).select("id1", "id2")
         ),
@@ -3173,21 +3165,21 @@ def q_docs_dup_matrix(spark, sf_dir):
 
 def exact_pair_graph(spark, sf_dir):
     """The flagship exact t=0.8 Jaccard pair relation (id1, id2),
-    SESSION-pinned (operators/cache.py:session_pin) so the five recall
-    audits that all use it as their truth denominator
+    session-checkpointed (operators/cache.py session_ckpt) so the five
+    recall audits that all use it as their truth denominator
     (q_dedup_lsh_recall, q_dedup_lsh_band_sweep, the two
     q_dedup_simhash_*_recall rows, q_dedup_sorted_neighborhood)
     materialize it ONCE per (session, sf_dir) instead of each
     re-running the full exact self-join — VERDICT r11 item 4 (~100s of
     the 679s suite was five recomputes of the same pair graph). The
     relation is two id columns, ~965k rows at sf0.1 — a few MB, safe
-    to keep cached for the session; a different sf_dir or a new
-    session releases it first.
+    to keep for the session; a different sf_dir or a new session
+    rebuilds it (cache.scope).
 
     Audit semantics are unchanged: this is still the already-
     hash-verified flagship key composed verbatim (same builder, same
     oracle CTE), so the audits cannot drift from what they audit, and
-    a dropped pin (clearCache) degrades to recompute, never to a
+    a lost checkpoint (new session) degrades to recompute, never to a
     different answer."""
     from hive_similarity_join_spark.queries.similarity_q import (
         jaccard_self_pair_graph,
@@ -3805,7 +3797,7 @@ def snm_scored_pairs(spark, sf_dir, w_max: int):
     from hive_similarity_join_spark.queries.similarity_q import docs_rank_arrays
 
     return snm_scored_pairs_from(
-        arrs, w_max, rank_arrays=docs_rank_arrays(spark, sf_dir)
+        arrs, w_max, rank_arrays=docs_rank_arrays(spark, sf_dir).rel
     )
 
 
@@ -3911,12 +3903,11 @@ def snm_scored_graph(spark, sf_dir):
     representatives each re-ran the rank + neighbor-join + verify
     generator (~4 s apiece at sf0.1). n*w_max rows (id-pair-sized);
     degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "snm_scored_w125",
-        scope,
+        scope(spark, sf_dir),
         lambda: snm_scored_pairs(spark, sf_dir, _ENS_W),
     )
 
@@ -3927,7 +3918,7 @@ def ensemble_union_graph(spark, sf_dir):
     q_dedup_blocking_ensemble and q_dedup_ensemble_representatives
     each re-unioned (and re-distinct-ed) the three pinned legs
     (~3M rows at sf0.1). Degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
     def build():
         g_lsh = lsh_pair_graph(spark, sf_dir).select("id1", "id2")
@@ -3939,8 +3930,7 @@ def ensemble_union_graph(spark, sf_dir):
         )
         return g_lsh.unionByName(g_shw).unionByName(g_snm).distinct()
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("ensemble_union_t08", scope, build)
+    return session_ckpt("ensemble_union_t08", scope(spark, sf_dir), build)
 
 
 @query("q_dedup_sorted_neighborhood", oracle=_snm_oracle())

@@ -712,7 +712,7 @@ def bpe_trained(spark, sf_dir):
     once per session and immune to the bench's per-key clearCache.
     A new session recomputes from parquet."""
     from hive_similarity_join_spark.operators import bpe
-    from hive_similarity_join_spark.operators.cache import session_state
+    from hive_similarity_join_spark.operators.cache import scope, session_state
 
     def build():
         d = load_table(spark, sf_dir, "documents")
@@ -727,8 +727,7 @@ def bpe_trained(spark, sf_dir):
             words.append(cur)
         return {"words": words, "bests": bests}
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_state("bpe_trained", scope, build)
+    return session_state("bpe_trained", scope(spark, sf_dir), build)
 
 
 @query(
@@ -1508,15 +1507,14 @@ def mixture_loss(spark, sf_dir):
     rows) — r16 optimization: all three mixture keys re-ran the corpus
     bigram pass + reference-vocabulary probe (~2-4 s apiece at sf0.1)
     to get the same D-row relation. Degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.operators.reweight import (
         heldout_oov_loss,
     )
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
     return session_ckpt(
         "mixture_heldout_loss",
-        scope,
+        scope(spark, sf_dir),
         lambda: heldout_oov_loss(load_table(spark, sf_dir, "documents")),
     )
 

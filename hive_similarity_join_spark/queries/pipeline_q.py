@@ -603,27 +603,24 @@ def _near_dupe_ids(spark, sf_dir):
     set; the build's survivor subplan is plan-identical to the
     registry-pinned ``surv``, so the kernel reads the cached rows.
     Degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.operators.similarity import similarity_join
-    from hive_similarity_join_spark.queries.similarity_q import (
-        rank_arrays_slice,
-    )
+    from hive_similarity_join_spark.queries.similarity_q import docs_rank_arrays
 
     def build():
         surv = _surv_of(_kept_relation(spark, sf_dir))
         # r17: survivors are a subset of documents, so the shared
         # corpus rank-array relation sliced to survivor ids is a
         # covering representation — identical pairs under any covering
-        # dictionary (the r16 token_dict losslessness contract), and
-        # the kernel skips its own tokenize/dictionary/sort stages.
+        # dictionary (the ``prepare`` dictionary contract), and the
+        # kernel skips its own tokenize/dictionary/sort stages.
         pairs = similarity_join(
-            surv, "doc_id", "text", threshold=CLEAN_NEAR_T,
-            sorted_rel=rank_arrays_slice(spark, sf_dir, surv),
+            docs_rank_arrays(spark, sf_dir).slice(surv.select("doc_id")),
+            threshold=CLEAN_NEAR_T,
         )
         return pairs.select(F.col("id2").alias("doc_id")).distinct()
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("pipeline_near_dupe_ids", scope, build)
+    return session_ckpt("pipeline_near_dupe_ids", scope(spark, sf_dir), build)
 
 
 def _clean_stages(spark, sf_dir):
@@ -724,7 +721,7 @@ def _contaminated_ids(spark, sf_dir):
     stage_waterfall each re-ran the gram explode + broadcast probe.
     Node-sized id set; degrade is recompute."""
     from hive_similarity_join_spark.functions import text as TX
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.queries.search_q import _DECON_MOD, _DECON_N
 
     def build():
@@ -748,8 +745,7 @@ def _contaminated_ids(spark, sf_dir):
             .distinct()
         )
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("pipeline_contaminated_ids", scope, build)
+    return session_ckpt("pipeline_contaminated_ids", scope(spark, sf_dir), build)
 
 
 def _llm_stages(spark, sf_dir):

@@ -71,17 +71,14 @@ def jaccard_self_pair_graph(spark, sf_dir):
     session pays generation once and the rest read blocks. Identical
     rows to the flagship key (same builder); degrade on a new session
     is recompute from parquet."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
     def build():
-        docs = load_table(spark, sf_dir, "documents")
         return similarity_join(
-            docs, "doc_id", "text", threshold=T_SELF, measure="jaccard",
-            sorted_rel=docs_rank_arrays(spark, sf_dir),
+            docs_rank_arrays(spark, sf_dir), threshold=T_SELF, measure="jaccard"
         )
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("exact_pair_graph_t08", scope, build)
+    return session_ckpt("exact_pair_graph_t08", scope(spark, sf_dir), build)
 
 
 _RS_LEFT = "(SELECT * FROM documents WHERE source < 'src5')"
@@ -100,10 +97,10 @@ def q_simjoin_jaccard_rs(spark, sf_dir):
     right = docs.filter(F.col("source") >= "src5")
     # left ∪ right = all documents, so the shared corpus dictionary is
     # exactly the dictionary this join would build (r16).
+    corpus = docs_rank_arrays(spark, sf_dir)
     return similarity_join(
-        left, "doc_id", "text", threshold=T_RS, measure="jaccard", other=right,
-        sorted_rel=rank_arrays_slice(spark, sf_dir, left),
-        other_sorted_rel=rank_arrays_slice(spark, sf_dir, right),
+        corpus.slice(left.select("doc_id")), threshold=T_RS, measure="jaccard",
+        other=corpus.slice(right.select("doc_id")),
     )
 
 
@@ -118,54 +115,38 @@ def docs_token_dict(spark, sf_dir):
     intersects rank arrays, a bijection) — and every consumer's join
     sides partition the documents table. Vocab-sized; degrade is
     recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
-    from hive_similarity_join_spark.operators.similarity import (
-        _rank_tokens,
-        _tokenized,
-    )
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
+    from hive_similarity_join_spark.operators.similarity import build_token_dict
 
     def build():
         d = load_table(spark, sf_dir, "documents")
-        return _rank_tokens(_tokenized(d, "doc_id", "text", None))
+        return build_token_dict(d, "doc_id", "text")
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("docs_token_dict", scope, build)
+    return session_ckpt("docs_token_dict", scope(spark, sf_dir), build)
 
 
 def docs_rank_arrays(spark, sf_dir):
-    """Session-checkpointed rank-sorted corpus relation (_id, _rks, _n)
-    against the shared dictionary — r17: this relation depends only on
-    (corpus, dictionary), not on threshold or measure, yet the t0.8 and
-    t0.9 graph builds, the dice/cosine/overlap/jaccard_rs measure keys,
-    both containment forms, the greedy containment dedup and the SNM
-    verify each re-derived it (explode + dict join + collect, ~1.5-2 s
-    apiece at sf0.1). Per-doc rows are side-independent, so R-S forms
-    consume broadcast-semi-joined slices. Corpus-token-sized int
-    arrays; degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
-    from hive_similarity_join_spark.operators.similarity import (
-        _sorted_by_rank,
-        _tokenized,
-    )
+    """Session-checkpointed rank-sorted corpus (_id, _rks, _n) against
+    the shared dictionary, as a kernel-ready ``Prepared`` side — r17:
+    this relation depends only on (corpus, dictionary), not on
+    threshold or measure, yet the t0.8 and t0.9 graph builds, the
+    dice/cosine/overlap/jaccard_rs measure keys, both containment
+    forms, the greedy containment dedup and the SNM verify each
+    re-derived it (explode + dict join + collect, ~1.5-2 s apiece at
+    sf0.1). Per-doc rows are side-independent, so R-S forms and subsets
+    consume ``Prepared.slice``s. Corpus-token-sized int arrays; degrade
+    is recompute."""
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
+    from hive_similarity_join_spark.operators.similarity import Prepared, prepare
 
     def build():
         d = load_table(spark, sf_dir, "documents")
-        return _sorted_by_rank(
-            _tokenized(d, "doc_id", "text", None),
-            docs_token_dict(spark, sf_dir),
-        )
+        return prepare(
+            d, "doc_id", "text",
+            dictionary=docs_token_dict(spark, sf_dir), persist=False,
+        ).rel
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("docs_rank_arrays", scope, build)
-
-
-def rank_arrays_slice(spark, sf_dir, side):
-    """``docs_rank_arrays`` restricted to one side of a documents
-    split — broadcast semi-join on the side's doc ids (node-sized)."""
-    return docs_rank_arrays(spark, sf_dir).join(
-        F.broadcast(side.select(F.col("doc_id").alias("_id"))),
-        "_id", "left_semi",
-    )
+    return Prepared(session_ckpt("docs_rank_arrays", scope(spark, sf_dir), build))
 
 
 def docs_weighted_sorted(spark, sf_dir):
@@ -181,21 +162,18 @@ def docs_weighted_sorted(spark, sf_dir):
     IS the corpus scale, and the per-doc rows of a side are exactly the
     corpus relation restricted to that side's ids. Corpus-token-sized
     int arrays (the same order as the pair graphs); degrade is
-    recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
-    from hive_similarity_join_spark.operators.similarity import (
-        _rarity_dict,
-        _tokenized,
-        _weighted_sorted,
-    )
+    recompute. Returned as a weighted ``Prepared`` side."""
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
+    from hive_similarity_join_spark.operators.similarity import Prepared, prepare
 
     def build():
         d = load_table(spark, sf_dir, "documents")
-        r = _tokenized(d, "doc_id", "text", None)
-        return _weighted_sorted(r, _rarity_dict(r))
+        return prepare(d, "doc_id", "text", weighted=True, persist=False).rel
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("docs_weighted_sorted", scope, build)
+    return Prepared(
+        session_ckpt("docs_weighted_sorted", scope(spark, sf_dir), build),
+        weighted=True,
+    )
 
 
 def _measure_oracle(measure_sql: str, pred_sql: str) -> str:
@@ -237,10 +215,8 @@ T_OVERLAP = 20
 def q_simjoin_dice(spark, sf_dir):
     """Dice-measure self-join: candidates pruned via the lossless
     equivalent-Jaccard bound t/(2-t), verified exactly (§2.7)."""
-    docs = load_table(spark, sf_dir, "documents")
     return similarity_join(
-        docs, "doc_id", "text", threshold=T_DICE, measure="dice",
-        sorted_rel=docs_rank_arrays(spark, sf_dir),
+        docs_rank_arrays(spark, sf_dir), threshold=T_DICE, measure="dice"
     )
 
 
@@ -254,10 +230,8 @@ def q_simjoin_dice(spark, sf_dir):
 def q_simjoin_cosine(spark, sf_dir):
     """Set-cosine self-join: candidate bound jaccard >= t^2 (lossless),
     exact verify."""
-    docs = load_table(spark, sf_dir, "documents")
     return similarity_join(
-        docs, "doc_id", "text", threshold=T_COS, measure="cosine",
-        sorted_rel=docs_rank_arrays(spark, sf_dir),
+        docs_rank_arrays(spark, sf_dir), threshold=T_COS, measure="cosine"
     )
 
 
@@ -270,10 +244,8 @@ def q_simjoin_cosine(spark, sf_dir):
 def q_simjoin_overlap(spark, sf_dir):
     """Absolute-overlap self-join (|A∩B| >= c): prefix length n - c + 1,
     both sizes >= c — the T-overlap primitive under the ratio measures."""
-    docs = load_table(spark, sf_dir, "documents")
     return similarity_join(
-        docs, "doc_id", "text", threshold=T_OVERLAP, measure="overlap",
-        sorted_rel=docs_rank_arrays(spark, sf_dir),
+        docs_rank_arrays(spark, sf_dir), threshold=T_OVERLAP, measure="overlap"
     )
 
 
@@ -492,11 +464,9 @@ def q_simjoin_containment(spark, sf_dir):
     keys."""
     from hive_similarity_join_spark.operators.similarity import containment_join
 
-    docs = load_table(spark, sf_dir, "documents")
     return containment_join(
-        docs, "doc_id", "text", threshold=T_CONTAIN,
+        docs_rank_arrays(spark, sf_dir), threshold=T_CONTAIN,
         min_size_ratio=CONTAIN_SIZE_RATIO,
-        sorted_rel=docs_rank_arrays(spark, sf_dir),
     )
 
 
@@ -543,10 +513,10 @@ def q_simjoin_containment_rs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("source") < "src5")
     corpus = docs.filter(F.col("source") >= "src5")
+    prepared = docs_rank_arrays(spark, sf_dir)
     return containment_join(
-        batch, "doc_id", "text", threshold=T_CONTAIN_RS, other=corpus,
-        sorted_rel=rank_arrays_slice(spark, sf_dir, batch),
-        other_sorted_rel=rank_arrays_slice(spark, sf_dir, corpus),
+        prepared.slice(batch.select("doc_id")), threshold=T_CONTAIN_RS,
+        other=prepared.slice(corpus.select("doc_id")),
     )
 
 
@@ -602,11 +572,9 @@ def q_simjoin_weighted_containment(spark, sf_dir):
         weighted_containment_join,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
     return weighted_containment_join(
-        docs, "doc_id", "text", threshold=T_WCONTAIN,
+        docs_weighted_sorted(spark, sf_dir), threshold=T_WCONTAIN,
         min_weight_ratio=WCONTAIN_RATIO,
-        sorted_rel=docs_weighted_sorted(spark, sf_dir),
     )
 
 
@@ -665,10 +633,8 @@ def q_simjoin_weighted_jaccard(spark, sf_dir):
         weighted_jaccard_join,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
     return weighted_jaccard_join(
-        docs, "doc_id", "text", threshold=T_WJACCARD,
-        sorted_rel=docs_weighted_sorted(spark, sf_dir),
+        docs_weighted_sorted(spark, sf_dir), threshold=T_WJACCARD
     )
 
 
@@ -734,19 +700,11 @@ def q_simjoin_weighted_containment_rs(spark, sf_dir):
     corpus = docs.filter(F.col("source") >= "src5")
     # r17: both sides are slices of the shared corpus weighted-sorted
     # relation (the union rarity scale IS the corpus scale here, and
-    # per-doc rows are side-independent) — broadcast-semi-joined down
-    # to each side's ids.
+    # per-doc rows are side-independent).
     ws = docs_weighted_sorted(spark, sf_dir)
     return weighted_containment_join(
-        batch, "doc_id", "text", threshold=T_WCONTAIN_RS, other=corpus,
-        sorted_rel=ws.join(
-            F.broadcast(batch.select(F.col("doc_id").alias("_id"))),
-            "_id", "left_semi",
-        ),
-        other_sorted_rel=ws.join(
-            F.broadcast(corpus.select(F.col("doc_id").alias("_id"))),
-            "_id", "left_semi",
-        ),
+        ws.slice(batch.select("doc_id")), threshold=T_WCONTAIN_RS,
+        other=ws.slice(corpus.select("doc_id")),
     )
 
 

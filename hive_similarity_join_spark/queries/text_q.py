@@ -179,25 +179,21 @@ def q_dedup_near(spark, sf_dir):
 
 def near_pair_graph(spark, sf_dir):
     """The exact t=NEAR_DUP_T unigram-Jaccard pair relation
-    (id1, id2, sim), SESSION-pinned — r16 optimization: q_dedup_near,
-    q_dedup_connected and q_dedup_connected_star (CC_T == NEAR_DUP_T)
-    each re-ran the full exact kernel at t=0.9 (~5 s apiece at sf0.1).
-    Same contract as exact_pair_graph: id-pair-sized, one live pin per
-    (session, sf_dir), degrade is recompute."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    (id1, id2, sim), session-checkpointed (operators/cache.py
+    session_ckpt) — r16 optimization: q_dedup_near, q_dedup_connected
+    and q_dedup_connected_star (CC_T == NEAR_DUP_T) each re-ran the
+    full exact kernel at t=0.9 (~5 s apiece at sf0.1). Same contract
+    as exact_pair_graph: id-pair-sized, one live value per (session,
+    sf_dir), degrade is recompute."""
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
     from hive_similarity_join_spark.queries.similarity_q import (
         docs_rank_arrays,
     )
 
     def build():
-        d = load_table(spark, sf_dir, "documents")
-        return similarity_join(
-            d, "doc_id", "text", threshold=NEAR_DUP_T,
-            sorted_rel=docs_rank_arrays(spark, sf_dir),
-        )
+        return similarity_join(docs_rank_arrays(spark, sf_dir), threshold=NEAR_DUP_T)
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("exact_pair_graph_t09", scope, build)
+    return session_ckpt("exact_pair_graph_t09", scope(spark, sf_dir), build)
 
 
 _NGRAM_TOKS = (
@@ -237,15 +233,16 @@ def q_dedup_ngram(spark, sf_dir):
 
 def ngram_pair_graph(spark, sf_dir):
     """The trigram-Jaccard pair relation (id1, id2, sim) at
-    t=NGRAM_DUP_T, SESSION-pinned (operators/cache.py:session_pin) —
-    the r16 optimization: TEN keys consume this graph (the key itself,
-    pagerank, triangles, communities, cc_vs_lpa, k-core, bridges,
-    degree_dist, docs_dup_matrix, winnowing_recall) and each re-ran
-    the full trigram kernel (~5-7 s at sf0.1, ~60 s of the suite)
-    before the pin. Same contract as exact_pair_graph: id-pair-sized
-    relation, one live pin per (session, sf_dir), degrade after a
-    clearCache is recompute — never a different answer."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    t=NGRAM_DUP_T, session-checkpointed (operators/cache.py
+    session_ckpt) — the r16 optimization: TEN keys consume this graph
+    (the key itself, pagerank, triangles, communities, cc_vs_lpa,
+    k-core, bridges, degree_dist, docs_dup_matrix, winnowing_recall)
+    and each re-ran the full trigram kernel (~5-7 s at sf0.1, ~60 s of
+    the suite) before it was shared. Same contract as
+    exact_pair_graph: id-pair-sized relation, one live value per
+    (session, sf_dir), degrade on a new session is recompute — never a
+    different answer."""
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
     def build():
         d = load_table(spark, sf_dir, "documents")
@@ -258,8 +255,7 @@ def ngram_pair_graph(spark, sf_dir):
             shingled, "doc_id", tokens_col="shingles", threshold=NGRAM_DUP_T
         )
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_ckpt("ngram_pair_graph_t05", scope, build)
+    return session_ckpt("ngram_pair_graph_t05", scope(spark, sf_dir), build)
 
 
 @query(
@@ -604,9 +600,8 @@ def q_dedup_containment(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     pairs = containment_join(
-        d, "doc_id", "text", threshold=T_CONTAIN,
+        docs_rank_arrays(spark, sf_dir), threshold=T_CONTAIN,
         min_size_ratio=CONTAIN_SIZE_RATIO,
-        sorted_rel=docs_rank_arrays(spark, sf_dir),
     )
     contained = pairs.select(F.col("id1").alias("doc_id")).distinct()
     return d.join(contained, "doc_id", "left_anti").select("doc_id", "source")

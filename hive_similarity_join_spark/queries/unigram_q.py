@@ -268,26 +268,26 @@ def unigram_chain(spark, sf_dir):
     E-steps; all vocab-sized). pc1/pc2 are cheap aggregates over the
     pinned segmentations. Degrade after a clearCache is recompute,
     never a different answer (the DP is deterministic)."""
-    from hive_similarity_join_spark.operators.cache import session_ckpt
+    from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
+    key = scope(spark, sf_dir)
 
     def wf_build():
         d = load_table(spark, sf_dir, "documents")
         return UG.word_freqs_plain(d, TX.bag_tokens("text"), _W)
 
-    wf = session_ckpt("unigram_wf", scope, wf_build)
+    wf = session_ckpt("unigram_wf", key, wf_build)
     seed = session_ckpt(
         "unigram_seed",
-        scope,
+        key,
         lambda: UG.with_probs(UG.seed_pieces(UG.substrings(wf, _P), _K)),
     )
     seg1 = session_ckpt(
-        "unigram_seg1", scope, lambda: UG.viterbi_segment(wf, seed, _W, _P)
+        "unigram_seg1", key, lambda: UG.viterbi_segment(wf, seed, _W, _P)
     )
     pc1 = UG.with_probs(UG.piece_counts(seg1))
     seg2 = session_ckpt(
-        "unigram_seg2", scope, lambda: UG.viterbi_segment(wf, pc1, _W, _P)
+        "unigram_seg2", key, lambda: UG.viterbi_segment(wf, pc1, _W, _P)
     )
     pc2 = UG.with_probs(UG.piece_counts(seg2))
     return wf, [seed, pc1, pc2], seg1, seg2

@@ -43,10 +43,9 @@ def topk_ckpt(name):
 
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            from hive_similarity_join_spark.operators.cache import session_ckpt
+            from hive_similarity_join_spark.operators.cache import scope, session_ckpt
 
-            scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-            return session_ckpt(name, scope, lambda: fn(spark, sf_dir))
+            return session_ckpt(name, scope(spark, sf_dir), lambda: fn(spark, sf_dir))
 
         return wrapped
 

@@ -126,7 +126,7 @@ def wp_trained(spark, sf_dir):
     (operators/cache.py session_state): the bench's per-key
     clearCache cannot drop it; a new session recomputes from
     parquet.""".format(R=_WPR)
-    from hive_similarity_join_spark.operators.cache import session_state
+    from hive_similarity_join_spark.operators.cache import scope, session_state
 
     def build():
         d = load_table(spark, sf_dir, "documents")
@@ -144,8 +144,7 @@ def wp_trained(spark, sf_dir):
         bests, words = WP.wordpiece_merge_rounds_trace(wf_enc, _WPR)
         return {"wfp": wfp, "bests": bests, "words": words}
 
-    scope = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    return session_state("wordpiece_trained", scope, build)
+    return session_state("wordpiece_trained", scope(spark, sf_dir), build)
 
 
 @query("q_wordpiece_merges", oracle=_MERGES_SQL)

@@ -106,25 +106,19 @@ def test_candidate_join_inputs_are_shuffled_once(spark):
     from hive_similarity_join_spark.operators.dedup import minhash_lsh_pairs
     from hive_similarity_join_spark.operators.similarity import similarity_join
     from hive_similarity_join_spark.queries.dedup_q import docs_minhash_sigs
-    from hive_similarity_join_spark.queries.similarity_q import (
-        docs_rank_arrays,
-        rank_arrays_slice,
-    )
+    from hive_similarity_join_spark.queries.similarity_q import docs_rank_arrays
 
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) != parallelism(spark)
     docs = load_table(spark, SF_SMOKE, "documents")
-    self_join = similarity_join(
-        docs, "doc_id", "text", threshold=0.8,
-        sorted_rel=docs_rank_arrays(spark, SF_SMOKE),
-    )
+    corpus = docs_rank_arrays(spark, SF_SMOKE)
+    self_join = similarity_join(corpus, threshold=0.8)
     _assert_placed_once(self_join, "_ptok")
 
     left = docs.filter(F.col("source") < "src5")
     right = docs.filter(F.col("source") >= "src5")
     rs_join = similarity_join(
-        left, "doc_id", "text", threshold=0.7, other=right,
-        sorted_rel=rank_arrays_slice(spark, SF_SMOKE, left),
-        other_sorted_rel=rank_arrays_slice(spark, SF_SMOKE, right),
+        corpus.slice(left.select("doc_id")), threshold=0.7,
+        other=corpus.slice(right.select("doc_id")),
     )
     _assert_placed_once(rs_join, "_ptok")
 

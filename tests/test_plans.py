@@ -339,65 +339,6 @@ def test_batch_pinned_scope_unpersists_even_on_raise(spark):
     assert not df.storageLevel.useMemory
 
 
-def test_session_pin_scope_and_self_healing(spark):
-    """session_pin (r12, the audit-family shared denominator): same
-    (name, scope) returns the SAME cached relation without rebuilding;
-    a scope change (new sf_dir / new session) releases the old pin and
-    rebuilds; clearCache() is self-healed by re-persisting the tracked
-    DataFrame; release_session_pins() empties the tier."""
-    from hive_similarity_join_spark.operators.cache import (
-        release_session_pins,
-        session_pin,
-    )
-
-    release_session_pins()
-    builds = []
-
-    # distinct ROW COUNTS per tag: an alias-only difference would
-    # canonicalize away and make the old pin report the new pin's
-    # cache entry as its own
-    def build(tag, n):
-        def f():
-            builds.append(tag)
-            return spark.range(n).selectExpr("id AS id_pin")
-
-        return f
-
-    try:
-        a = session_pin("t_pin", "scope1", build("a", 5))
-        a.count()
-        assert a.storageLevel.useMemory
-        b = session_pin("t_pin", "scope1", build("b", 5))
-        assert b is a and builds == ["a"]  # cached, no rebuild
-        # self-healing after a cache wipe
-        spark.catalog.clearCache()
-        assert not a.storageLevel.useMemory
-        c = session_pin("t_pin", "scope1", build("c", 5))
-        assert c.storageLevel.useMemory and builds == ["a"]  # re-persisted
-        # scope change releases and rebuilds
-        d = session_pin("t_pin", "scope2", build("d", 7))
-        assert builds == ["a", "d"]
-        assert not a.storageLevel.useMemory
-        assert d.storageLevel.useMemory
-        # a FAILED rebuild on scope change must leave the tier empty for
-        # the name — the old-scope entry may not silently resurrect
-        # (ADVICE r12: pop before build())
-        def boom():
-            raise RuntimeError("build failed")
-
-        try:
-            session_pin("t_pin", "scope3", boom)
-        except RuntimeError:
-            pass
-        assert not d.storageLevel.useMemory  # old pin was released
-        e = session_pin("t_pin", "scope2", build("e", 7))
-        assert builds == ["a", "d", "e"]  # rebuilt, NOT resurrected d
-        assert e is not d
-    finally:
-        assert release_session_pins() >= 1
-        spark.catalog.clearCache()
-
-
 def test_low_cardinality_window_detector_fixtures():
     """The r10 detector: flags a window over the raw fact partitioned
     only by a low-card column, clears the same spec when the mainline
@@ -556,8 +497,8 @@ def test_heavy_key_job_count_tripwire(spark):
 
 def test_audit_family_shares_pinned_exact_pairs(spark):
     """VERDICT r11 item 4: the five recall audits share ONE
-    session-pinned exact t=0.8 pair relation (dedup_q.exact_pair_graph
-    over cache.session_pin). Cold, the first audit materializes the
+    session-shared exact t=0.8 pair relation (dedup_q.exact_pair_graph
+    over cache.session_ckpt). Cold, the first audit materializes the
     pin inside its own jobs (measured 52 at smoke); every later audit
     in the same session reuses the cached relation — measured 12 jobs
     vs 37 cold for q_dedup_simhash_wide_recall. A lost pin (released
@@ -658,16 +599,13 @@ def test_weighted_containment_salted_and_python_free(spark):
     assert "REPARTITION_BY_NUM" in plan, plan
     assert "_salt" in plan
     assert "EvalPython" not in plan
-    from hive_similarity_join_spark.operators.similarity import (
-        _rarity_dict,
-        _tokenized,
-        _weighted_sorted,
-    )
+    from hive_similarity_join_spark.operators.similarity import prepare
     from hive_similarity_join_spark.sources.loader import load_table
 
-    r = _tokenized(load_table(spark, SF_SMOKE, "documents"),
-                   "doc_id", "text", None)
-    gen_plan = explain_str(_weighted_sorted(r, _rarity_dict(r)))
+    docs = load_table(spark, SF_SMOKE, "documents")
+    gen_plan = explain_str(
+        prepare(docs, "doc_id", "text", weighted=True, persist=False).rel
+    )
     assert "BroadcastHashJoin" in gen_plan  # the vocabulary broadcast
     assert "EvalPython" not in gen_plan
 

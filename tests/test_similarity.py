@@ -12,11 +12,14 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.similarity import (
+    Prepared,
     containment_join,
     naive_similarity_join,
+    prepare,
     similarity_join,
     tokenize,
     weighted_containment_join,
+    weighted_jaccard_join,
 )
 from hive_similarity_join_spark.sources.loader import load_table
 from tests.conftest import SF_SMOKE
@@ -144,7 +147,7 @@ def test_bag_jaccard_matches_bruteforce_and_bounds(spark):
 
 
 def test_prebuilt_token_dict_matches_inline(spark, tmp_path):
-    """similarity_join(token_dict=...) must reproduce the inline
+    """A kernel over prepare(dictionary=...) must reproduce the inline
     stage-1 results exactly, both from a live DataFrame and from the
     parquet-materialized catalog shape."""
     import shutil
@@ -165,7 +168,7 @@ def test_prebuilt_token_dict_matches_inline(spark, tmp_path):
         got_live = sorted(
             (r.id1, r.id2, r.sim)
             for r in similarity_join(
-                docs, "doc_id", "text", 0.8, token_dict=d_live
+                prepare(docs, "doc_id", "text", dictionary=d_live), threshold=0.8
             ).collect()
         )
         build_token_dict(docs, "doc_id", "text", path=path)
@@ -173,7 +176,7 @@ def test_prebuilt_token_dict_matches_inline(spark, tmp_path):
         got_disk = sorted(
             (r.id1, r.id2, r.sim)
             for r in similarity_join(
-                docs, "doc_id", "text", 0.8, token_dict=d_disk
+                prepare(docs, "doc_id", "text", dictionary=d_disk), threshold=0.8
             ).collect()
         )
         assert got_live == want and got_disk == want and want
@@ -481,14 +484,56 @@ def test_weighted_jaccard_reduces_to_unweighted_on_uniform_weights(spark):
 
 
 @pytest.mark.parametrize(
-    "join", [similarity_join, containment_join, weighted_containment_join]
+    "join",
+    [similarity_join, containment_join, weighted_containment_join,
+     weighted_jaccard_join],
 )
 def test_rs_call_without_other_sorted_rel_raises(spark, join):
-    """An R-S call through the prepared-relation seam must pass both
-    sides; with only ``sorted_rel`` it would silently self-join R."""
+    """A kernel takes both sides raw or both prepared, of its own
+    flavour, and raises ``ValueError`` otherwise: a raw side next to a
+    ``Prepared`` one (either way round) would be ranked by another
+    dictionary — an R-S call with only R prepared used to self-join R
+    silently — and a ``Prepared`` of the other flavour is refused up
+    front (a rank-sorted relation in a weighted kernel used to fail
+    late, with an ``AnalysisException`` on the missing weights)."""
     docs = spark.createDataFrame(_random_docs(61, n=10))
-    prepared = spark.createDataFrame(
+    weighted = join in (weighted_containment_join, weighted_jaccard_join)
+    rel = spark.createDataFrame(
         [(0, [1, 2], 2)], "_id long, _rks array<int>, _n int"
     )
-    with pytest.raises(ValueError, match="other_sorted_rel"):
-        join(docs, "id", "text", other=docs, sorted_rel=prepared)
+    calls = [lambda: join(Prepared(rel, not weighted))]
+    if join is not weighted_jaccard_join:  # the one self-join-only kernel
+        side = Prepared(rel, weighted)
+        calls += [
+            lambda: join(docs, "id", "text", other=side),
+            lambda: join(side, other=docs),
+        ]
+    for call in calls:
+        with pytest.raises(ValueError, match="Prepared"):
+            call()
+
+
+@pytest.mark.parametrize(
+    "join,t",
+    [(similarity_join, 0.5), (containment_join, 0.8),
+     (weighted_containment_join, 0.8)],
+)
+def test_prepared_slices_match_raw_rs_call(spark, join, t):
+    """Over ``prepare(corpus).slice(left)`` / ``.slice(right)`` an R-S
+    kernel returns exactly the rows of the raw R-S call: the smoke
+    corpus split by source partitions the corpus, so the corpus
+    dictionary (and, weighted, its rarity scale) is the one the raw call
+    builds over both sides."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    left = docs.filter(F.col("source") < "src5")
+    right = docs.filter(F.col("source") >= "src5")
+    weighted = join is weighted_containment_join
+    corpus = prepare(docs, "doc_id", "text", weighted=weighted, persist=False)
+    want = sorted(join(left, "doc_id", "text", threshold=t, other=right).collect())
+    got = sorted(
+        join(
+            corpus.slice(left.select("doc_id")), threshold=t,
+            other=corpus.slice(right.select("doc_id")),
+        ).collect()
+    )
+    assert got == want and want
