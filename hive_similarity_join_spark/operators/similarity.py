@@ -3,12 +3,20 @@
 Re-expresses the reference's Hive/MapReduce set-similarity-join pipeline
 (the VCL 3-stage algorithm: Vernica, Carey, Li, "Efficient Parallel
 Set-Similarity Joins Using MapReduce", SIGMOD 2010; prefix filtering from
-Chaudhuri et al. SSJoin / Xiao et al. PPJoin) as ONE composed, lazy,
-UDF-free DataFrame transformation. The reference runs it as 3 chained MR
-jobs with HDFS materialization between them; here Catalyst plans the whole
-thing as one DAG and Tungsten codegens the verification math.
+Chaudhuri et al. SSJoin / Xiao et al. PPJoin) as ONE composed, UDF-free
+DataFrame transformation. The reference runs it as 3 chained MR jobs with
+HDFS materialization between them; here Catalyst plans stages 2 and 3 as
+one DAG and Tungsten codegens the verification math.
 
-Stages (all lazy Column expressions — no Python in the hot path):
+Stage 1 is NOT lazy: its rank (``operators/rank.py``) runs Spark jobs
+when the DataFrame is built, because ``grouped_prefix_scan`` freezes its
+range partitioning with an eager ``localCheckpoint`` — a correctness
+requirement of the two-pass range scan. So a raw kernel call,
+:func:`prepare` and :func:`build_token_dict` run the token-frequency
+pass at call time (an ``explain()`` pays it too); a prebuilt
+``dictionary`` or :class:`Prepared` sides skip it.
+
+Stages (Column expressions — no Python in the hot path):
   1. token ordering  — global token frequency, rarest-first rank;
                        result is vocabulary-sized -> broadcast.
   2. prefix + length filter — each record emits only its first
@@ -51,6 +59,7 @@ from pyspark.sql import functions as F
 from hive_similarity_join_spark.operators.rank import ranked_by
 from hive_similarity_join_spark.operators.cache import pin
 from hive_similarity_join_spark.operators.partitions import hash_placed, spread
+from hive_similarity_join_spark.operators.skew import all_salts, one_salt
 
 MEASURES = ("jaccard", "overlap", "dice", "cosine")
 
@@ -288,8 +297,10 @@ def prepare(
     (coalesced by bytes and skew-split, see the ``session`` module
     docstring), so a consumer schedules one task per useful partition
     rather than one per ``spark.sql.shuffle.partitions``. Pass
-    ``persist=False`` for a fully lazy plan (composition into larger
-    DAGs, single-consumer callers, builds that are checkpointed).
+    ``persist=False`` for an unpinned plan (composition into larger
+    DAGs, single-consumer callers, builds that are checkpointed). Either
+    way, without ``dictionary`` this call runs the dictionary's rank
+    jobs before it returns (module docstring: stage 1 is not lazy).
     """
 
     def keep(rel: DataFrame) -> DataFrame:
@@ -338,21 +349,19 @@ def _sides(
     return given[0].rel, given[-1].rel
 
 
-def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFrame:
-    """Stage 2b: emit prefix tokens with their 0-based position (for the
-    PPJoin positional filter).
+def _prefix_len(n: Column, rate: float) -> Column:
+    """Stage 2b's prefix length ``p = n - ceil(rate*n) + 1`` (at least 1)
+    for a record of ``n`` tokens.
 
-    ``short=False`` — the standard probing prefix
-    ``p = n - ceil(t_eq*n) + 1`` (valid against ANY partner passing the
-    length filter: partner size >= t_eq*n forces required overlap
-    alpha >= t_eq*n).
+    ``rate = t_eq`` — the standard probing prefix (valid against ANY
+    partner passing the length filter: partner size >= t_eq*n forces
+    required overlap alpha >= t_eq*n).
 
-    ``short=True`` — the VCL/PPJoin INDEXING prefix
-    ``p = n - ceil(2*t_eq/(1+t_eq)*n) + 1``, valid only for the
-    SMALLER-size record of a pair: with n2 >= n1, the required overlap
-    alpha >= t_eq/(1+t_eq)*(n1+n2) >= 2*t_eq/(1+t_eq)*n1. The first
-    shared token (in global rank order) of a qualifying pair provably
-    sits inside the smaller record's SHORT prefix and the larger
+    ``rate = 2*t_eq/(1+t_eq)`` — the VCL/PPJoin INDEXING (short) prefix,
+    valid only for the SMALLER-size record of a pair: with n2 >= n1, the
+    required overlap alpha >= t_eq/(1+t_eq)*(n1+n2) >= 2*t_eq/(1+t_eq)*n1.
+    The first shared token (in global rank order) of a qualifying pair
+    provably sits inside the smaller record's SHORT prefix and the larger
     record's STANDARD prefix — so joining short-side x standard-side is
     lossless when the join orients pairs by (size, id), and the
     positional filter's first-shared-token argument is unchanged.
@@ -365,11 +374,13 @@ def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFr
     rounding DOWN the ceil argument can only lengthen the prefix, which
     is always safe; shortening it is not).
     """
-    rate = (2.0 * t_eq / (1.0 + t_eq)) if short else t_eq
-    p = F.greatest(
-        F.lit(1),
-        (F.col("_n") - F.ceil(F.col("_n") * rate - 1e-9) + 1).cast("int"),
-    )
+    return F.greatest(F.lit(1), (n - F.ceil(n * rate - 1e-9) + 1).cast("int"))
+
+
+def _prefix_exploded(rel: DataFrame, p: Column) -> DataFrame:
+    """Stage 2b: emit each record's first ``p`` tokens (a length over
+    ``_n``, e.g. :func:`_prefix_len`) with their 0-based position, for
+    the PPJoin positional filter."""
     return rel.select(
         "_id",
         "_rks",
@@ -386,28 +397,109 @@ def _prefix_exploded(rel: DataFrame, t_eq: float, short: bool = False) -> DataFr
 N_SALTS = 32
 
 
-def _all_salts() -> Column:
-    """Probe-side salt: every prefix row is replicated across all salts."""
-    return F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)]))
-
-
-def _one_salt() -> Column:
-    """Index-side salt: each row lands on exactly one salt, by its id."""
-    return F.pmod(F.hash(F.col("_id")), F.lit(N_SALTS))
-
-
 def _placed_side(
-    rows: DataFrame, salt: Column, side: int,
+    rows: DataFrame, side: int,
     cols: tuple[str, ...] = ("_id", "_n", "_pp", "_ptok"),
 ) -> DataFrame:
     """One input of a salted candidate join: ``rows``' ``cols`` plus
     ``_salt``, hash-placed on (``_ptok``, ``_salt``) and renamed for
-    join side ``side`` (``_id`` -> ``id1``, ``_x`` -> ``_x1``)."""
+    join side ``side`` (``_id`` -> ``id1``, ``_x`` -> ``_x1``). Side 1
+    (the probe) is replicated across all ``N_SALTS`` salts, side 2 (the
+    index) takes one salt by id (``operators/skew.py``), so each probe
+    row meets every index row of its token exactly once."""
+    salt = all_salts(N_SALTS) if side == 1 else one_salt(["_id"], N_SALTS)
     return hash_placed(
         rows.withColumn("_salt", salt),
         ["_ptok", "_salt"],
         {c: f"id{side}" if c == "_id" else f"{c}{side}" for c in (*cols, "_salt")},
     )
+
+
+def _overlap_bound() -> Column:
+    """PPJoin positional bound of a candidate row: a shared prefix token
+    at 0-based positions (_pp1, _pp2) bounds the pair's total overlap by
+    ``1 + min(n1-pp1-1, n2-pp2-1)``. Lossless: for a qualifying pair, its
+    FIRST shared token in rank order has every other shared token after
+    both positions, so that row's bound >= true overlap."""
+    return 1 + F.least(
+        F.col("_n1") - F.col("_pp1") - 1, F.col("_n2") - F.col("_pp2") - 1
+    )
+
+
+def _weighted_bound() -> Column:
+    """Weighted twin of :func:`_overlap_bound`: the shared token's weight
+    plus the smaller of the two remaining suffix weights bounds the
+    pair's shared weight (same first-shared-token argument)."""
+    return (F.col("_wtok1") + F.least(F.col("_nxt1"), F.col("_nxt2"))).cast("double")
+
+
+def _shared_weight() -> Column:
+    """Exact shared weight of a verified pair: id1's weights summed over
+    the rank intersection, in integers (no float-association drift)."""
+    return F.aggregate(
+        F.transform(
+            F.array_intersect(F.col("_rks1"), F.col("_rks2")),
+            lambda k: F.element_at(F.col("_wmap1"), k),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _verify_side(rel: DataFrame, side: int) -> DataFrame:
+    """What verification reads of one prepared side, keyed by ``id1`` or
+    ``id2``: the rank array, plus the rank->weight map and total weight
+    of a weighted side (columns the measure leaves unread are pruned)."""
+    cols = [F.col("_id").alias(f"id{side}"), F.col("_rks").alias(f"_rks{side}")]
+    if "_tw" in rel.columns:
+        cols += [
+            F.map_from_arrays("_rks", "_ws").alias(f"_wmap{side}"),
+            F.col("_tw").alias(f"_vtw{side}"),
+        ]
+    return rel.select(*cols)
+
+
+def _verified(
+    a: DataFrame,
+    b: DataFrame,
+    preds: list[Column],
+    r_sorted: DataFrame,
+    s_sorted: DataFrame,
+    sim: Column,
+    threshold: float,
+) -> DataFrame:
+    """Stage 3, the candidate-and-verify step every kernel ends with:
+    join the placed sides ``a`` and ``b`` on (prefix token, salt) under
+    the kernel's filter predicates ``preds``, dedupe the (id1, id2)
+    pairs, join each side's verify columns back (:func:`_verify_side`)
+    and keep the pairs whose exact measure ``sim`` reaches
+    ``threshold``. Returns (id1, id2, sim).
+
+    Candidates carry ONLY the id pair through the join + dedupe shuffle
+    (16 bytes/row, not the token arrays — pairs are duplicated once per
+    shared prefix token, so array-carrying multiplies shuffle bytes by
+    the duplication factor). Arrays are joined back once per side after
+    dedupe."""
+    cond = (F.col("_ptok1") == F.col("_ptok2")) & (F.col("_salt1") == F.col("_salt2"))
+    for p in preds:
+        cond = cond & p
+    cands = a.join(b, cond).select("id1", "id2").dropDuplicates(["id1", "id2"])
+    return (
+        cands.join(_verify_side(r_sorted, 1), "id1")
+        .join(_verify_side(s_sorted, 2), "id2")
+        .withColumn("sim", sim)
+        .filter(F.col("sim") >= threshold)
+        .select("id1", "id2", "sim")
+    )
+
+
+def _check_threshold(threshold: float) -> None:
+    """Every kernel's threshold must be > 0: at 0 every pair qualifies,
+    but candidates only come from shared prefix tokens, so pairs that
+    share nothing would be silently missing. Checked before any side is
+    prepared (preparation runs Spark jobs)."""
+    if not threshold > 0:  # NaN fails too
+        raise ValueError(f"threshold must be > 0, got {threshold!r}")
 
 
 def similarity_join(
@@ -449,127 +541,64 @@ def similarity_join(
     """
     if measure not in MEASURES:
         raise ValueError(f"measure must be one of {MEASURES}, got {measure!r}")
-    if measure == "overlap":
-        t_eq = None  # absolute overlap: prefix p = n - c + 1
-    else:
-        t_eq = _equivalent_jaccard_threshold(threshold, measure)
+    _check_threshold(threshold)
     r_sorted, s_sorted = _sides(
         df, other, False,
         id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
     )
-
+    n1, n2 = F.col("_n1"), F.col("_n2")
     if measure == "overlap":
+        # Absolute overlap c: prefix p = n - c + 1, both sizes >= c.
         c = int(math.ceil(threshold))
-        p_expr = F.greatest(F.lit(1), (F.col("_n") - c + 1).cast("int"))
-        a = r_sorted.select(
-            "_id",
-            "_rks",
-            "_n",
-            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_pp", "_ptok"),
-        )
-        b = s_sorted.select(
-            "_id",
-            "_rks",
-            "_n",
-            F.posexplode(F.slice("_rks", 1, p_expr)).alias("_pp", "_ptok"),
-        )
+        p = F.greatest(F.lit(1), (F.col("_n") - c + 1).cast("int"))
+        a, b = _prefix_exploded(r_sorted, p), _prefix_exploded(s_sorted, p)
+        preds = [n1 >= c, n2 >= c]
+        if other is None:
+            preds.insert(0, F.col("id1") < F.col("id2"))
+        alpha = F.lit(float(c))
     else:
+        t_eq = _equivalent_jaccard_threshold(threshold, measure)
+        short = 2.0 * t_eq / (1.0 + t_eq)
         # Self-join: orient each pair by (size, id) so the a-side is the
         # pair's SMALLER record and can emit the short indexing prefix —
         # fewer salt-replicated prefix rows AND fewer candidate-join
-        # matches, losslessly (see _prefix_exploded). R-S joins must keep
+        # matches, losslessly (see _prefix_len). R-S joins must keep
         # (R, S) orientation, so both sides emit the standard prefix and
-        # the same bound is applied as a join predicate instead.
-        a = _prefix_exploded(r_sorted, t_eq, short=(other is None))
-        b = _prefix_exploded(s_sorted, t_eq)
-
-    a = _placed_side(a, _all_salts(), 1)
-    b = _placed_side(b, _one_salt(), 2)
-
-    cond = [
-        F.col("_ptok1") == F.col("_ptok2"),
-        F.col("_salt1") == F.col("_salt2"),
-    ]
-    size_oriented = other is None and measure != "overlap"
-    if size_oriented:
-        # (size, id) pair orientation: a-side = smaller record, matching
-        # its short indexing prefix against the b-side standard prefix.
-        cond.append(
-            (F.col("_n1") < F.col("_n2"))
-            | ((F.col("_n1") == F.col("_n2")) & (F.col("id1") < F.col("id2")))
+        # the pair's smaller side must match within ITS short prefix (the
+        # first shared token always does) as a join predicate instead.
+        a = _prefix_exploded(
+            r_sorted, _prefix_len(F.col("_n"), short if other is None else t_eq)
         )
-    elif other is None:
-        cond.append(F.col("id1") < F.col("id2"))
-    if other is not None and measure != "overlap":
-        # R-S twin of the indexing-prefix bound: the pair's smaller side
-        # must match within ITS short prefix (the first shared token
-        # always does). Standard prefixes are emitted; this predicate
-        # prunes candidate matches beyond the short bound.
-        rate2 = 2.0 * t_eq / (1.0 + t_eq)
-        ls1 = F.greatest(
-            F.lit(1),
-            (F.col("_n1") - F.ceil(F.col("_n1") * rate2 - 1e-9) + 1).cast("int"),
-        )
-        ls2 = F.greatest(
-            F.lit(1),
-            (F.col("_n2") - F.ceil(F.col("_n2") * rate2 - 1e-9) + 1).cast("int"),
-        )
-        cond.append(
-            ((F.col("_n1") <= F.col("_n2")) & (F.col("_pp1") < ls1))
-            | ((F.col("_n2") <= F.col("_n1")) & (F.col("_pp2") < ls2))
-        )
-    # Symmetric length filter (lossless for ratio measures): J>=t forces
-    # t*n1 <= n2 and t*n2 <= n1. For overlap: both sizes >= c.
-    if measure == "overlap":
-        cond.append(F.col("_n1") >= int(math.ceil(threshold)))
-        cond.append(F.col("_n2") >= int(math.ceil(threshold)))
-    else:
-        cond.append(F.col("_n2").cast("double") >= F.col("_n1") * t_eq - 1e-9)
-        cond.append(F.col("_n1").cast("double") >= F.col("_n2") * t_eq - 1e-9)
-    # PPJoin positional filter (Xiao et al., WWW 2008): a shared prefix
-    # token at 0-based positions (i, j) bounds the total overlap by
-    # 1 + min(n1-i-1, n2-j-1); rows whose bound can't reach the
-    # measure's required overlap alpha are dropped BEFORE the dedupe
-    # shuffle. Lossless: for a qualifying pair, its FIRST shared token
-    # in rank order has every other shared token after both positions,
-    # so that row's bound >= true overlap >= alpha and it survives.
-    n1, n2 = F.col("_n1").cast("double"), F.col("_n2").cast("double")
-    if measure == "jaccard":
-        alpha = (n1 + n2) * (threshold / (1.0 + threshold))
-    elif measure == "dice":
-        alpha = (n1 + n2) * (threshold / 2.0)
-    elif measure == "cosine":
-        alpha = F.sqrt(n1 * n2) * threshold
-    else:  # overlap
-        alpha = F.lit(float(math.ceil(threshold)))
-    ubound = 1 + F.least(
-        F.col("_n1") - F.col("_pp1") - 1, F.col("_n2") - F.col("_pp2") - 1
+        b = _prefix_exploded(s_sorted, _prefix_len(F.col("_n"), t_eq))
+        if other is None:
+            preds = [(n1 < n2) | ((n1 == n2) & (F.col("id1") < F.col("id2")))]
+        else:
+            preds = [
+                ((n1 <= n2) & (F.col("_pp1") < _prefix_len(n1, short)))
+                | ((n2 <= n1) & (F.col("_pp2") < _prefix_len(n2, short)))
+            ]
+        # Symmetric length filter (lossless): J>=t forces t*n1 <= n2 and
+        # t*n2 <= n1.
+        preds += [
+            n2.cast("double") >= n1 * t_eq - 1e-9,
+            n1.cast("double") >= n2 * t_eq - 1e-9,
+        ]
+        # The measure's required overlap alpha over the pair's sizes.
+        d1, d2 = n1.cast("double"), n2.cast("double")
+        if measure == "jaccard":
+            alpha = (d1 + d2) * (threshold / (1.0 + threshold))
+        elif measure == "dice":
+            alpha = (d1 + d2) * (threshold / 2.0)
+        else:  # cosine
+            alpha = F.sqrt(d1 * d2) * threshold
+    # Positional filter: candidate rows whose bound can't reach alpha are
+    # dropped BEFORE the dedupe shuffle.
+    preds.append(_overlap_bound().cast("double") >= alpha - 1e-9)
+    out = _verified(
+        _placed_side(a, 1), _placed_side(b, 2), preds, r_sorted, s_sorted,
+        _sim_expr(measure, F.col("_rks1"), F.col("_rks2")), threshold,
     )
-    cond.append(ubound.cast("double") >= alpha - 1e-9)
-
-    join_cond = cond[0]
-    for c in cond[1:]:
-        join_cond = join_cond & c
-    # Candidates carry ONLY the id pair through the join + dedupe shuffle
-    # (16 bytes/row, not the token arrays — pairs are duplicated once per
-    # shared prefix token, so array-carrying multiplies shuffle bytes by
-    # the duplication factor). Arrays are joined back once per side after
-    # dedupe for verification.
-    cands = (
-        a.join(b, join_cond)
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    v1 = r_sorted.select(F.col("_id").alias("id1"), F.col("_rks").alias("_rks1"))
-    v2 = s_sorted.select(F.col("_id").alias("id2"), F.col("_rks").alias("_rks2"))
-    sim = _sim_expr(measure, F.col("_rks1"), F.col("_rks2"))
-    out = (
-        cands.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-    )
-    if size_oriented:
+    if other is None and measure != "overlap":
         # Size orientation is an internal detail; the contract is
         # canonical id1 < id2 (every measure is symmetric, so sim is
         # orientation-free).
@@ -578,7 +607,7 @@ def similarity_join(
             F.greatest("id1", "id2").alias("id2"),
             "sim",
         )
-    return out.select("id1", "id2", "sim")
+    return out
 
 
 def naive_similarity_join(
@@ -727,48 +756,23 @@ def containment_join(
     Sides are raw or rank-sorted :class:`Prepared`, as for
     ``similarity_join``.
     """
+    _check_threshold(threshold)
     r_sorted, s_sorted = _sides(
         df, other, False,
         id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
     )
-    probe = _placed_side(_prefix_exploded(r_sorted, threshold), _all_salts(), 1)
-    index = _placed_side(
-        s_sorted.select("_id", "_n", F.posexplode("_rks").alias("_pp", "_ptok")),
-        _one_salt(),
-        2,
-    )
-
+    probe = _prefix_exploded(r_sorted, _prefix_len(F.col("_n"), threshold))
+    index = s_sorted.select("_id", "_n", F.posexplode("_rks").alias("_pp", "_ptok"))
     alpha = F.ceil(F.col("_n1").cast("double") * threshold - 1e-9)
-    ubound = 1 + F.least(
-        F.col("_n1") - F.col("_pp1") - 1, F.col("_n2") - F.col("_pp2") - 1
-    )
-    join_cond = (
-        (F.col("_ptok1") == F.col("_ptok2"))
-        & (F.col("_salt1") == F.col("_salt2"))
-        & (F.col("_n2") >= alpha)
-        & (ubound >= alpha)
-    )
+    preds = [F.col("_n2") >= alpha, _overlap_bound() >= alpha]
     if other is None:
-        join_cond = join_cond & (F.col("id1") != F.col("id2"))
+        preds.append(F.col("id1") != F.col("id2"))
     if min_size_ratio is not None:
-        join_cond = join_cond & (
-            F.col("_n2").cast("double") >= F.col("_n1") * F.lit(min_size_ratio)
-        )
-    cands = (
-        probe.join(index, join_cond)
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    v1 = r_sorted.select(F.col("_id").alias("id1"), F.col("_rks").alias("_rks1"))
-    v2 = s_sorted.select(F.col("_id").alias("id2"), F.col("_rks").alias("_rks2"))
+        preds.append(F.col("_n2").cast("double") >= F.col("_n1") * F.lit(min_size_ratio))
     inter = F.size(F.array_intersect(F.col("_rks1"), F.col("_rks2"))).cast("double")
-    sim = inter / F.size(F.col("_rks1")).cast("double")
-    return (
-        cands.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id1", "id2", "sim")
+    return _verified(
+        _placed_side(probe, 1), _placed_side(index, 2), preds, r_sorted, s_sorted,
+        inter / F.size(F.col("_rks1")).cast("double"), threshold,
     )
 
 
@@ -846,56 +850,22 @@ def weighted_containment_join(
     defense as the unweighted rarest-first order, but now the filter
     bound itself adapts to how much evidence each token carries.
     """
+    _check_threshold(threshold)
     r_sorted, s_sorted = _sides(
         df, other, True,
         id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
     )
-    probe, index = _weighted_sides(r_sorted, s_sorted, threshold)
-
     alpha = F.col("_tw1").cast("double") * threshold - 1e-9
-    pos_bound = (
-        F.col("_wtok1") + F.least(F.col("_nxt1"), F.col("_nxt2"))
-    ).cast("double")
-    join_cond = (
-        (F.col("_ptok1") == F.col("_ptok2"))
-        & (F.col("_salt1") == F.col("_salt2"))
-        & (F.col("_tw2").cast("double") >= alpha)
-        & (pos_bound >= alpha)
-    )
+    preds = [F.col("_tw2").cast("double") >= alpha, _weighted_bound() >= alpha]
     if other is None:
-        join_cond = join_cond & (F.col("id1") != F.col("id2"))
+        preds.append(F.col("id1") != F.col("id2"))
     if min_weight_ratio is not None:
-        join_cond = join_cond & (
-            F.col("_tw2").cast("double")
-            >= F.col("_tw1") * F.lit(min_weight_ratio)
+        preds.append(
+            F.col("_tw2").cast("double") >= F.col("_tw1") * F.lit(min_weight_ratio)
         )
-    cands = (
-        probe.join(index, join_cond)
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    v1 = r_sorted.select(
-        F.col("_id").alias("id1"),
-        F.col("_rks").alias("_rks1"),
-        F.map_from_arrays("_rks", "_ws").alias("_wmap1"),
-        F.col("_tw").alias("_vtw1"),
-    )
-    v2 = s_sorted.select(F.col("_id").alias("id2"), F.col("_rks").alias("_rks2"))
-    shared_w = F.aggregate(
-        F.transform(
-            F.array_intersect(F.col("_rks1"), F.col("_rks2")),
-            lambda k: F.element_at(F.col("_wmap1"), k),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sim = shared_w.cast("double") / F.col("_vtw1").cast("double")
-    return (
-        cands.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id1", "id2", "sim")
+    return _verified(
+        *_weighted_sides(r_sorted, s_sorted, threshold), preds, r_sorted, s_sorted,
+        _shared_weight().cast("double") / F.col("_vtw1").cast("double"), threshold,
     )
 
 
@@ -924,11 +894,9 @@ def _weighted_sides(
     alpha = F.col("_tw").cast("double") * rate - 1e-9
     probe = _placed_side(
         tokens(r_sorted).filter(F.col("_z._sfx").cast("double") >= alpha),
-        _all_salts(), 1, ("_id", "_tw", "_ptok", "_wtok", "_nxt"),
+        1, ("_id", "_tw", "_ptok", "_wtok", "_nxt"),
     )
-    index = _placed_side(
-        tokens(s_sorted), _one_salt(), 2, ("_id", "_tw", "_ptok", "_nxt")
-    )
+    index = _placed_side(tokens(s_sorted), 2, ("_id", "_tw", "_ptok", "_nxt"))
     return probe, index
 
 
@@ -944,7 +912,9 @@ def build_token_dict(
     ``spark.read.parquet(path)``) to ``prepare(dictionary=...)`` to skip
     the per-query frequency pass — the catalog-table shape for a corpus
     that is joined repeatedly. The dictionary is only valid for the
-    corpus (and tokenizer) it was built from.
+    corpus (and tokenizer) it was built from. Runs Spark jobs at call
+    time, also without ``path``: the rank's range scan checkpoints
+    eagerly (module docstring).
     """
     rel = _tokenized(df, id_col, text_col, tokens_col)
     d = _rank_tokens(rel)
@@ -999,57 +969,23 @@ def weighted_jaccard_join(
     at 100 TB. ``df`` is raw or a weighted :class:`Prepared`, as for
     ``weighted_containment_join``.
     """
+    _check_threshold(threshold)
     r_sorted, _ = _sides(
         df, None, True,
         id_col=id_col, text_col=text_col, tokens_col=tokens_col, persist=persist,
     )
     tt = threshold / (1.0 + threshold)
-    probe, index = _weighted_sides(r_sorted, r_sorted, 2.0 * tt)
-
-    alpha = (
-        (F.col("_tw1") + F.col("_tw2")).cast("double") * F.lit(tt) - 1e-9
-    )
-    orient = (F.col("_tw1") < F.col("_tw2")) | (
-        (F.col("_tw1") == F.col("_tw2")) & (F.col("id1") < F.col("id2"))
-    )
-    pos_bound = (
-        F.col("_wtok1") + F.least(F.col("_nxt1"), F.col("_nxt2"))
-    ).cast("double")
-    join_cond = (
-        (F.col("_ptok1") == F.col("_ptok2"))
-        & (F.col("_salt1") == F.col("_salt2"))
-        & orient
-        & (F.col("_tw2").cast("double") <= F.col("_tw1") / F.lit(threshold) + 1e-9)
-        & (pos_bound >= alpha)
-    )
-    cands = (
-        probe.join(index, join_cond)
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    v1 = r_sorted.select(
-        F.col("_id").alias("id1"),
-        F.col("_rks").alias("_rks1"),
-        F.map_from_arrays("_rks", "_ws").alias("_wmap1"),
-        F.col("_tw").alias("_vtw1"),
-    )
-    v2 = r_sorted.select(F.col("_id").alias("id2"), F.col("_tw").alias("_vtw2"),
-                         F.col("_rks").alias("_rks2"))
-    shared_w = F.aggregate(
-        F.transform(
-            F.array_intersect(F.col("_rks1"), F.col("_rks2")),
-            lambda k: F.element_at(F.col("_wmap1"), k),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    tw1, tw2 = F.col("_tw1"), F.col("_tw2")
+    preds = [
+        (tw1 < tw2) | ((tw1 == tw2) & (F.col("id1") < F.col("id2"))),
+        tw2.cast("double") <= tw1 / F.lit(threshold) + 1e-9,
+        _weighted_bound() >= (tw1 + tw2).cast("double") * F.lit(tt) - 1e-9,
+    ]
+    shared_w = _shared_weight()
     sim = shared_w.cast("double") / (
         F.col("_vtw1") + F.col("_vtw2") - shared_w
     ).cast("double")
-    return (
-        cands.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id1", "id2", "sim")
+    return _verified(
+        *_weighted_sides(r_sorted, r_sorted, 2.0 * tt), preds, r_sorted, r_sorted,
+        sim, threshold,
     )

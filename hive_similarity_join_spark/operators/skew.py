@@ -1,6 +1,8 @@
-"""First-class skewed-join salting — the technique the similarity
-kernel applies inline (operators/similarity.py candidate join),
-exposed as a reusable operator for ANY equi join with hot keys.
+"""First-class skewed-join salting, the one home of the salting rule:
+``all_salts`` and ``one_salt`` build the two salt columns, for the
+similarity kernels' candidate join (operators/similarity.py
+``_placed_side``) and for ``salted_join``, the reusable operator for
+ANY equi join with hot keys.
 
 The problem: a hash join shuffles both sides on the join key, so every
 row of a hot key lands in ONE reducer task — at 100 TB a single
@@ -25,12 +27,23 @@ RIGHT, and n around the per-executor core count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.partitions import parallelism
 
 _SALT = "_skew_salt"
+
+
+def all_salts(n: int) -> Column:
+    """Replicated-side salt: every row is exploded into all ``n`` salts."""
+    return F.explode(F.array(*[F.lit(i) for i in range(n)]))
+
+
+def one_salt(cols: list[str], n: int) -> Column:
+    """Spread-side salt: each row lands on exactly one of ``n`` salts,
+    by the combined hash of ``cols``."""
+    return F.pmod(F.hash(*[F.col(c) for c in cols]), F.lit(n))
 
 
 def salted_join(
@@ -68,12 +81,6 @@ def salted_join(
             "spread_col must include a column beyond the join key(s)"
         )
     n = n_salts or parallelism(left.sparkSession)
-    salted_left = left.withColumn(
-        _SALT, F.pmod(F.hash(*[F.col(c) for c in spread]), F.lit(n))
-    )
-    replicated_right = right.withColumn(
-        _SALT, F.explode(F.array(*[F.lit(i) for i in range(n)]))
-    )
-    return salted_left.join(
-        replicated_right, keys + [_SALT], how
+    return left.withColumn(_SALT, one_salt(spread, n)).join(
+        right.withColumn(_SALT, all_salts(n)), keys + [_SALT], how
     ).drop(_SALT)

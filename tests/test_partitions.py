@@ -7,18 +7,7 @@ from pyspark.sql import functions as F
 
 from hive_similarity_join_spark.operators.partitions import parallelism, spread
 from hive_similarity_join_spark.sources.loader import load_table
-from tests.conftest import SF_SMOKE
-
-
-def _jobs_launched(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import SF_SMOKE, final_plan_nodes, jobs_launched
 
 
 def test_spread_of_shuffled_input_runs_no_job(spark):
@@ -26,7 +15,7 @@ def test_spread_of_shuffled_input_runs_no_job(spark):
     the shuffle as its own job; ``spread`` must decide from the plan."""
     docs = load_table(spark, SF_SMOKE, "documents")
     grouped = docs.groupBy("doc_id").agg(F.max("text").alias("text"))
-    out, jobs = _jobs_launched(spark, "spread_grouped", lambda: spread(grouped))
+    out, jobs = jobs_launched(spark, "spread_grouped", lambda: spread(grouped))
     assert jobs == 0
     assert out.count() == docs.count()
 
@@ -34,7 +23,7 @@ def test_spread_of_shuffled_input_runs_no_job(spark):
 def test_spread_of_single_file_scan_reaches_parallelism(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     assert docs.rdd.getNumPartitions() == 1  # one small parquet file
-    out, jobs = _jobs_launched(spark, "spread_scan", lambda: spread(docs))
+    out, jobs = jobs_launched(spark, "spread_scan", lambda: spread(docs))
     assert jobs == 0
     assert out.rdd.getNumPartitions() == parallelism(spark)
 
@@ -42,23 +31,6 @@ def test_spread_of_single_file_scan_reaches_parallelism(spark):
 def test_spread_keeps_an_already_spread_scan(spark):
     wide = spark.range(0, 100, 1, parallelism(spark))
     assert spread(wide) is wide
-
-
-def _final_plan_nodes(node):
-    """Every node of an executed (final AQE) plan, walking into query
-    stages, reused exchanges and nested adaptive plans."""
-    yield node
-    name = node.nodeName()
-    if name == "AdaptiveSparkPlan":
-        inner = [node.executedPlan()]
-    elif name.endswith("QueryStage"):
-        inner = [node.plan()]
-    elif name == "ReusedExchange":
-        inner = [node.child()]
-    else:
-        inner = [node.children().apply(i) for i in range(node.children().size())]
-    for c in inner:
-        yield from _final_plan_nodes(c)
 
 
 def _child(node):
@@ -70,7 +42,7 @@ def _stacked_exchanges(df):
     ``Exchange`` whose child is a ``ShuffleQueryStage``, directly or
     through an ``AQEShuffleRead``."""
     out = []
-    for n in _final_plan_nodes(df._jdf.queryExecution().executedPlan()):
+    for n in final_plan_nodes(df._jdf.queryExecution().executedPlan()):
         if n.nodeName() != "Exchange":
             continue
         c = _child(n)
@@ -85,7 +57,7 @@ def _key_exchange_partitions(df, key: str) -> set[int]:
     """Partition counts of the shuffles hash-partitioned on ``key``."""
     return {
         n.outputPartitioning().numPartitions()
-        for n in _final_plan_nodes(df._jdf.queryExecution().executedPlan())
+        for n in final_plan_nodes(df._jdf.queryExecution().executedPlan())
         if n.nodeName() == "Exchange"
         and f"hashpartitioning({key}" in n.outputPartitioning().toString()
     }

@@ -5,7 +5,9 @@ the FIXTURES.md regression anchors."""
 
 from __future__ import annotations
 
+import math
 import random
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -22,9 +24,11 @@ from hive_similarity_join_spark.operators.similarity import (
     weighted_jaccard_join,
 )
 from hive_similarity_join_spark.sources.loader import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, final_plan_nodes, jobs_launched, plan_children
 
 VOCAB = ["a", "b", "c", "d", "e", "f", "g", "h", "i", "j"]
+KERNELS = [similarity_join, containment_join, weighted_containment_join,
+           weighted_jaccard_join]
 
 
 def _random_docs(seed: int, n: int = 60):
@@ -483,11 +487,7 @@ def test_weighted_jaccard_reduces_to_unweighted_on_uniform_weights(spark):
     assert wq == uq
 
 
-@pytest.mark.parametrize(
-    "join",
-    [similarity_join, containment_join, weighted_containment_join,
-     weighted_jaccard_join],
-)
+@pytest.mark.parametrize("join", KERNELS)
 def test_rs_call_without_other_sorted_rel_raises(spark, join):
     """A kernel takes both sides raw or both prepared, of its own
     flavour, and raises ``ValueError`` otherwise: a raw side next to a
@@ -537,3 +537,81 @@ def test_prepared_slices_match_raw_rs_call(spark, join, t):
         ).collect()
     )
     assert got == want and want
+
+
+@pytest.mark.parametrize("t", [0.0, -0.5, math.nan], ids=["zero", "negative", "nan"])
+@pytest.mark.parametrize("join", KERNELS)
+def test_nonpositive_threshold_raises_before_any_job(spark, join, t):
+    """At threshold 0 every pair qualifies, but candidates only come
+    from shared prefix tokens, so the kernel would silently drop every
+    pair that shares nothing. A threshold <= 0 or NaN raises
+    ``ValueError`` before the sides are prepared (preparation runs the
+    dictionary's rank jobs)."""
+    docs = spark.createDataFrame(_random_docs(71, n=10))
+
+    def call():
+        with pytest.raises(ValueError, match="threshold"):
+            join(docs, "id", "text", threshold=t)
+
+    _, jobs = jobs_launched(spark, f"bad_threshold_{join.__name__}_{t}", call)
+    assert jobs == 0
+
+
+def _path_to(node, hit):
+    """Nodes from ``node`` down to the first node ``hit`` accepts."""
+    if hit(node):
+        return [node]
+    for child in plan_children(node):
+        path = _path_to(child, hit)
+        if path:
+            return [node, *path]
+    return None
+
+
+_PASS_THROUGH = ("Project", "Exchange", "AQEShuffleRead", "ShuffleQueryStage",
+                 "InputAdapter", "WholeStageCodegen")
+_DEDUPE = re.compile(r"HashAggregate\(keys=\[id1#\d+L?, id2#\d+L?\], functions=\[\]\)")
+
+
+@pytest.mark.parametrize(
+    "join,t,rs",
+    [
+        pytest.param(similarity_join, 0.8, False, id="similarity_join-self"),
+        pytest.param(similarity_join, 0.6, True, id="similarity_join-rs"),
+        pytest.param(containment_join, 0.9, False, id="containment_join-self"),
+        pytest.param(containment_join, 0.6, True, id="containment_join-rs"),
+        pytest.param(weighted_containment_join, 0.9, False,
+                     id="weighted_containment_join-self"),
+        pytest.param(weighted_containment_join, 0.6, True,
+                     id="weighted_containment_join-rs"),
+        pytest.param(weighted_jaccard_join, 0.5, False, id="weighted_jaccard_join-self"),
+    ],
+)
+def test_candidate_join_feeds_one_dedupe_then_verify(spark, join, t, rs):
+    """Every kernel ends in the same candidate-and-verify step: in the
+    executed plan, the candidate join on ``_ptok1`` feeds the one
+    (id1, id2) dedupe aggregate with no aggregate functions (planned as
+    a partial/final pair), no other aggregate follows it, and the
+    ``array_intersect`` verify sits above it."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    if rs:
+        out = join(
+            docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", threshold=t,
+            other=docs.filter(F.col("doc_id") % 2 == 1),
+        )
+    else:
+        out = join(docs, "doc_id", "text", threshold=t)
+    assert out.collect()
+    root = out._jdf.queryExecution().executedPlan()
+    cand = [
+        n for n in final_plan_nodes(root)
+        if n.nodeName().endswith("Join") and "_ptok1" in n.simpleString(25)
+    ]
+    assert len(cand) == 1
+    path = _path_to(root, lambda n: n.equals(cand[0]))
+    above = [n.simpleString(25) for n in reversed(path[:-1])]
+    verify = next(i for i, d in enumerate(above) if "array_intersect" in d)
+    fed = next(d for d in above if not d.startswith(_PASS_THROUGH))
+    aggs = [d for d in above[:verify] if "Aggregate" in d.split("(")[0]]
+    assert _DEDUPE.fullmatch(fed), fed
+    assert len(aggs) == 2 and all(_DEDUPE.fullmatch(d) for d in aggs), aggs
